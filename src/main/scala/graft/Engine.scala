@@ -89,6 +89,11 @@ object Engine {
     // TimestampType keeps them pushable; ntzToUtc stays as a no-op safety
     // net for any future physical annotation drift.
     c.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    // streaming checkpoint commits on local disk through java.nio rather
+    // than Hadoop FileContext (tens of ms per file → under 1 ms); other
+    // schemes keep Spark's default manager
+    c.set(graft.streaming.LocalCheckpointFileManager.ClassKey,
+      classOf[graft.streaming.LocalCheckpointFileManager].getName)
     spark
   }
 }

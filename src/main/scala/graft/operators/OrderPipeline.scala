@@ -157,10 +157,11 @@ object OrderPipeline {
   def projectEnriched(df: DataFrame): DataFrame =
     df.select(EnrichedFields.map(col): _*)
 
-  /** R1 — validity routing: (valid, invalid) split off one lineage (ref:
-    * src/app/order_validator.py:263-264). In streaming, write both via a
-    * single foreachBatch over a persisted batch (read-once, like the
-    * reference's single consumer loop).
+  /** R1 — validity routing for batch plans: (valid, invalid) split off one
+    * lineage (ref: src/app/order_validator.py:263-264). The streaming
+    * path does not use it: `OrderStream.routeToSinks` splits the
+    * micro-batch, a `LogicalRDD` over the already-planned batch that
+    * nothing can be pushed into, with one plain `where` per branch.
     *
     * The split goes through a [[graft.expressions.PushdownBarrier]]
     * column: without it, predicate pushdown substitutes `is_valid`'s
@@ -180,15 +181,17 @@ object OrderPipeline {
     * (ref: src/app/order_validator.py:267-269). Equal keys hash to the
     * same partition — the reference's per-order ordering guarantee.
     */
-  def withKafkaKey(df: DataFrame): DataFrame =
-    df.withColumn("key", coalesce(col("order_id").cast("string"), lit("unknown")))
+  def kafkaKey: Column = coalesce(col("order_id").cast("string"), lit("unknown"))
+
+  /** [[kafkaKey]] as a `key` column. */
+  def withKafkaKey(df: DataFrame): DataFrame = df.withColumn("key", kafkaKey)
 
   /** E1 — Kafka Connect schema envelope: {"schema": <constant struct
     * decl>, "payload": {...}} (ref: src/app/order_validator.py:95-123).
     * The schema half is a constant literal struct — Catalyst constant-folds
     * it, unlike the reference, which rebuilds it per message.
     */
-  def toConnectEnvelope(df: DataFrame): DataFrame = {
+  def connectEnvelope: Column = {
     val fieldDecl: Seq[(String, String)] = Seq(
       "order_id" -> "string", "product_name" -> "string", "quantity" -> "double",
       "price" -> "double", "order_date" -> "string", "total_price" -> "double"
@@ -204,10 +207,9 @@ object OrderPipeline {
         }.mkString(",") +
         """],"optional":false,"name":"enriched_order"},"payload":"""
     val payload = struct(EnrichedFields.map(col): _*)
-    df.withColumn(
-      "value",
-      concat(lit(schemaJson),
-        to_json(payload, Map("ignoreNullFields" -> "false")), lit("}"))
-    )
+    concat(lit(schemaJson), to_json(payload, Map("ignoreNullFields" -> "false")), lit("}"))
   }
+
+  /** [[connectEnvelope]] as a `value` column. */
+  def toConnectEnvelope(df: DataFrame): DataFrame = df.withColumn("value", connectEnvelope)
 }

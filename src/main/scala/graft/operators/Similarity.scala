@@ -4290,30 +4290,6 @@ object Similarity {
        |SELECT anchor_id, pos_id, neg_id, neg_cos, neg_rank
        |FROM pos LEFT JOIN neg USING (anchor_id)""".stripMargin
 
-  /** DuckDB mirror of [[contrastiveTriples]] — expects the dedup
-    * closure CTEs (ending in `comp`) and [[baseSql]] in scope.
-    */
-  def contrastiveTriplesSql(k: Int = 3): String =
-    s"""pos AS (SELECT cluster AS anchor_id, id AS pos_id FROM comp WHERE id <> cluster),
-       |q AS (
-       |  SELECT anchor_id, emb AS qemb, nrm AS qnrm
-       |  FROM (SELECT DISTINCT anchor_id FROM pos) a
-       |  JOIN base ON vec_id = anchor_id),
-       |ncand AS (
-       |  SELECT q.anchor_id, b.vec_id,
-       |    ${dotSql("qemb", "b.emb")} / (qnrm * b.nrm) AS cos
-       |  FROM base b CROSS JOIN q
-       |  LEFT JOIN comp c2 ON c2.id = b.vec_id
-       |  WHERE COALESCE(c2.cluster, b.vec_id) <> q.anchor_id),
-       |neg AS (
-       |  SELECT anchor_id, vec_id AS neg_id, cos AS neg_cos, rn AS neg_rank FROM (
-       |    SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY anchor_id
-       |      ORDER BY cos DESC, vec_id) AS BIGINT) AS rn
-       |    FROM ncand) t
-       |  WHERE rn <= $k)
-       |SELECT anchor_id, pos_id, neg_id, neg_cos, neg_rank
-       |FROM pos JOIN neg USING (anchor_id)""".stripMargin
-
   /** DuckDB mirror of [[bitextMine]]. */
   def bitextMineSql(pivotLang: String = "en", queryMod: Int = 50): String =
     s"""WITH $baseSql,

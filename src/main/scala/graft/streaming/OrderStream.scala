@@ -55,13 +55,6 @@ object OrderStream {
       .option("maxOffsetsPerTrigger", cfg.maxOffsetsPerTrigger)
       .load()
 
-  /** File-drop source with the same downstream contract as [[fromKafka]]
-    * (a `value` string column): each line is one order JSON. Used where no
-    * broker exists (tests, batch backfills).
-    */
-  def fromFiles(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.text(dir)
-
   /** D1→V→E→T — parse + validate + enrich, streaming-safe (pure column
     * transforms; no state).
     */
@@ -70,12 +63,25 @@ object OrderStream {
 
   /** Serialize a routed branch to Kafka message shape: key + envelope value. */
   def toMessages(df: DataFrame): DataFrame =
-    OrderPipeline.toConnectEnvelope(OrderPipeline.withKafkaKey(df))
-      .select(col("key"), col("value"))
+    df.select(OrderPipeline.kafkaKey.as("key"), OrderPipeline.connectEnvelope.as("value"))
 
   /** R1+S4+G1 — single-pass dual-sink routing. `writeBranch` abstracts the
     * physical sink (Kafka in production, anything in tests) so the routing
     * logic itself is testable without a broker.
+    *
+    * Each micro-batch is persisted, split into its two branches and
+    * written, then unpersisted. `writeBranch` may run concurrently for the
+    * two branches: "enriched" on the stream thread, "invalid" on a helper
+    * thread, so one branch's query planning and job scheduling overlaps
+    * the other's. The second job's tasks wait on the cached block's lock,
+    * so the batch is still computed once. Both writes finish before the
+    * batch is unpersisted and its offsets are committed; if either throws,
+    * the query fails with that exception.
+    *
+    * The branches are built on the `foreachBatch` batch, a `LogicalRDD`
+    * over the already-planned micro-batch: nothing can be pushed into it,
+    * so each branch is one plain `where` plus one `select`, without the
+    * pushdown barrier that [[OrderPipeline.route]] needs in batch plans.
     */
   def routeToSinks(processed: DataFrame, checkpoint: String)(
       writeBranch: (DataFrame, String) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
@@ -83,12 +89,38 @@ object OrderStream {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.persist()
-        try {
-          val (valid, invalid) = OrderPipeline.route(batch)
-          writeBranch(toMessages(valid), "enriched")
-          writeBranch(toMessages(invalid), "invalid")
-        } finally { batch.unpersist(); () }
+        try inParallel(
+          writeBranch(toMessages(batch.where(col("is_valid"))), "enriched"),
+          writeBranch(toMessages(batch.where(!col("is_valid"))), "invalid"))
+        finally { batch.unpersist(); () }
       }
+
+  /** Run `a` on this thread and `b` on a new helper thread; return once
+    * both have finished, rethrowing the first failure (`a`'s before
+    * `b`'s). The helper is created here, so it inherits this thread's
+    * Spark local properties (job group, job tags, description, SQL
+    * execution id) and active session: a streaming query's `stop()`
+    * cancels the helper's jobs along with the stream thread's. If this
+    * thread is interrupted while it waits, the helper is interrupted too
+    * and still awaited.
+    */
+  private def inParallel(a: => Unit, b: => Unit): Unit = {
+    @volatile var failedB: Throwable = null
+    val helper = new Thread(() => try b catch { case t: Throwable => failedB = t },
+      s"${Thread.currentThread.getName}-branch")
+    helper.setDaemon(true)
+    helper.start()
+    val failedA = try { a; null } catch { case t: Throwable => t }
+    var interrupted: InterruptedException = null
+    while (helper.isAlive)
+      try helper.join()
+      catch { case e: InterruptedException => interrupted = e; helper.interrupt() }
+    val failure = Seq(failedA, failedB, interrupted).find(_ != null)
+    failure.foreach { f =>
+      Seq(failedB, interrupted).filter(t => t != null && (t ne f)).foreach(f.addSuppressed)
+      throw f
+    }
+  }
 
   /** Kafka branch writer for [[routeToSinks]] (production path). */
   def kafkaBranchWriter(cfg: Config)(branch: DataFrame, which: String): Unit = {

@@ -30,7 +30,7 @@ class EndToEndSpec extends SparkSpec {
     // "endpoint": the fixture as a JSON-lines file
     val f = Files.createTempDirectory("graft-e2e").resolve("orders.jsonl")
     val fixtureLines = spark.read.option("multiLine", "true")
-      .json("/root/reference/src/data/raw_orders.json")
+      .json(rawOrdersFixture)
       .select(explode($"orders").as("o")).select(to_json($"o"))
       .as[String].collect()
     Files.write(f, fixtureLines.mkString("\n").getBytes(StandardCharsets.UTF_8),

@@ -6,8 +6,9 @@ import graft.operators.OrderPipeline._
 
 /** Golden + unit tests for the reference-parity order pipeline.
   *
-  * Golden: the reference fixture (100 orders, ref:
-  * src/data/raw_orders.json) must split exactly 97 valid / 3 invalid
+  * Golden: the order fixture (100 orders, `src/test/resources/
+  * raw_orders.json`, built to the reference's src/data/raw_orders.json
+  * invariants in FIXTURES.md §2) must split exactly 97 valid / 3 invalid
   * (order_ids 8, 24, 30) with the reference's exact error strings
   * (ref: src/app/order_validator.py:198,208).
   */
@@ -16,7 +17,7 @@ class OrderPipelineSpec extends SparkSpec {
 
   private lazy val fixture = {
     val raw = spark.read.option("multiLine", "true")
-      .json("/root/reference/src/data/raw_orders.json")
+      .json(rawOrdersFixture)
     // fixture shape: {"orders": [...]} — explode, then restring the loose fields
     raw.select(explode($"orders").as("o"))
       .select(OrderModel.RequiredFields.map(f => $"o".getField(f).cast("string").as(f)): _*)

@@ -8,6 +8,15 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val Sf = "/root/testdata/sf0.001"
 
+  /** The reference-parity order fixture (`{"orders": [...]}`, 100 orders;
+    * FIXTURES.md §2). A missing file fails the calling test.
+    */
+  def rawOrdersFixture: String = {
+    val url = getClass.getResource("/raw_orders.json")
+    assert(url != null, "test resource raw_orders.json is missing")
+    java.nio.file.Paths.get(url.toURI).toString
+  }
+
   /** Run `body` with the small-scan input rebalance (Tables.balanced)
     * disabled — plan-shape assertions pin the OPERATOR plan, which is
     * exactly the rebalance-off plan a production-scale scan produces

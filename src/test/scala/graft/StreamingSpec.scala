@@ -22,7 +22,7 @@ class StreamingSpec extends SparkSpec {
 
   private lazy val fixtureJson: Seq[String] = {
     val raw = spark.read.option("multiLine", "true")
-      .json("/root/reference/src/data/raw_orders.json")
+      .json(rawOrdersFixture)
     raw.select(explode($"orders").as("o")).select(to_json($"o").as("j"))
       .as[String].collect().toSeq
   }
