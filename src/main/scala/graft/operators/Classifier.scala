@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions, VectorFunctions}
+import graft.sources.StageMemo
 
 /** Hashed linear quality classifier — the trainable filter stage of a
   * curation pipeline in its DISTILLATION form (CCNet / GPT-3-style
@@ -49,6 +50,9 @@ import graft.functions.{TextFunctions, VectorFunctions}
   * association order as its DuckDB mirror.
   */
 object Classifier {
+
+  /** This family's namespace in the [[StageMemo]] artifact registry. */
+  private val Owner = "Classifier"
 
   /** Hashed feature buckets (plus one bias slot). */
   val NumBuckets = 32
@@ -140,23 +144,17 @@ object Classifier {
 
   // Feature table + trained weights are shared by the train and score
   // queries — same memo discipline as Dedup.clustersFor / kmeansFitMemo.
-  private val featMemo = new graft.sources.StageMemo[DataFrame](8)
-  private val wMemo = new graft.sources.StageMemo[Array[Long]](8)
-
   def featuresMemo(docs: DataFrame, dir: String): DataFrame =
-    featMemo.getOrCompute(
-      graft.sources.Tables.dataKey(docs.sparkSession, dir,
-        s"qclf|$QualityThreshold|$FeatScale"))(
-      graft.sources.StageMemo.reliableStage(features(docs)))
+    StageMemo.stage(Owner, docs.sparkSession, dir,
+      s"qclf|$QualityThreshold|$FeatScale")(features(docs))
 
   def fitMemo(docs: DataFrame, dir: String): Array[Long] =
-    wMemo.getOrCompute(
-      graft.sources.Tables.dataKey(docs.sparkSession, dir,
-        s"qclf_w|$QualityThreshold|$FeatScale|$Iters|$Lr"))(
+    StageMemo.value[Array[Long]](Owner, docs.sparkSession, dir,
+      s"qclf_w|$QualityThreshold|$FeatScale|$Iters|$Lr")(
       fitQuantized(featuresMemo(docs, dir)))
 
   /** Drop memoized feature tables and weights (test lifecycle hook). */
-  def clearMemos(): Unit = { featMemo.clear(); wMemo.clear() }
+  def clearMemos(): Unit = StageMemo.clear(Owner)
 
   /** Trained weight table: (dim, w) with w = wq / 2^24 exact. Dim
     * [[NumBuckets]] is the bias.
@@ -756,16 +754,13 @@ object Classifier {
   }
 
   def langFeaturesMemo(docs: DataFrame, dir: String): DataFrame =
-    featMemo.getOrCompute(
-      graft.sources.Tables.dataKey(docs.sparkSession, dir,
-        s"langclf|$FeatScale"))(
-      graft.sources.StageMemo.reliableStage(langFeatures(docs)))
+    StageMemo.stage(Owner, docs.sparkSession, dir, s"langclf|$FeatScale")(
+      langFeatures(docs))
 
   def langFitMemo(docs: DataFrame, dir: String,
       langs: Seq[String] = Langs): Array[Long] =
-    wMemo.getOrCompute(
-      graft.sources.Tables.dataKey(docs.sparkSession, dir,
-        s"langclf_w|$FeatScale|$Iters|$Lr|${langs.mkString(",")}"))(
+    StageMemo.value[Array[Long]](Owner, docs.sparkSession, dir,
+      s"langclf_w|$FeatScale|$Iters|$Lr|${langs.mkString(",")}")(
       fitLangQuantized(langFeaturesMemo(docs, dir), langs = langs))
 
   /** Confusion matrix of the trained student against the declared lang:
@@ -839,16 +834,13 @@ object Classifier {
           NumBuckets, FeatScale).as("x"))
 
   def langFeaturesNgramMemo(docs: DataFrame, dir: String): DataFrame =
-    featMemo.getOrCompute(
-      graft.sources.Tables.dataKey(docs.sparkSession, dir,
-        s"langclf3|$FeatScale"))(
-      graft.sources.StageMemo.reliableStage(langFeaturesNgram(docs)))
+    StageMemo.stage(Owner, docs.sparkSession, dir, s"langclf3|$FeatScale")(
+      langFeaturesNgram(docs))
 
   def langFitNgramMemo(docs: DataFrame, dir: String,
       langs: Seq[String] = Langs): Array[Long] =
-    wMemo.getOrCompute(
-      graft.sources.Tables.dataKey(docs.sparkSession, dir,
-        s"langclf3_w|$FeatScale|$Iters|$Lr|${langs.mkString(",")}"))(
+    StageMemo.value[Array[Long]](Owner, docs.sparkSession, dir,
+      s"langclf3_w|$FeatScale|$Iters|$Lr|${langs.mkString(",")}")(
       fitLangQuantized(langFeaturesNgramMemo(docs, dir), langs = langs))
 
   /** [[langConfusion]] under the trigram featurization — `q_doc_langclf3`,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
+import graft.sources.StageMemo
 
 /** Training-data curation operators: the selection/layout steps between a
   * raw deduplicated corpus and a tokenizer-ready training set.
@@ -22,6 +23,9 @@ import graft.functions.TextFunctions._
   *    sort, no driver state.
   */
 object Curation {
+
+  /** This family's namespace in the [[StageMemo]] artifact registry. */
+  private val Owner = "Curation"
 
   /** Per-language keep-permille for [[sampleStratified]]: downsample the
     * dominant language, keep the tails — the standard corpus-balancing
@@ -1600,6 +1604,29 @@ object Curation {
        |GROUP BY 1, 2""".stripMargin
   }
 
+  /** The distinct (source, h) coverage spine — shared input of all
+    * three source-selection spellings (count-budget, token-budget,
+    * KMV). A real pipeline computes the coverage sets ONCE per crawl
+    * and serves every selection question from them; `dir`-keyed
+    * callers memoize through the [[StageMemo]] registry, constructed-
+    * frame callers (specs) get a transient local checkpoint.
+    */
+  def sourceShinglesFor(docs: DataFrame, dir: String): DataFrame =
+    if (dir.isEmpty)
+      sourceShingles(docs).localCheckpoint(false)
+    else StageMemo.stage(Owner, docs.sparkSession, dir, "srcsh")(sourceShingles(docs))
+
+  private def sourceShingles(docs: DataFrame): DataFrame =
+    Dedup.shingles(docs.select(col("doc_id"), col("text")))
+      .join(docs.select(col("doc_id"), col("source")), "doc_id")
+      .select(col("source"), col("h")).distinct()
+      .repartition(col("h"))
+
+  /** Drop the memoized coverage spine (test lifecycle hook — the
+    * [[Dedup.clearMemos]] contract).
+    */
+  def clearMemos(): Unit = StageMemo.clear(Owner)
+
   /** Greedy maximum-coverage source selection: pick `budget` sources,
     * each round taking the source whose documents add the most NOT-YET-
     * COVERED distinct trigram shingles (ties to the lexicographically
@@ -1633,34 +1660,6 @@ object Curation {
     * break gain ties by source name, and the cumulative sum is over
     * ≤budget driver-side integers.
     */
-  private val sshMemo = new graft.sources.StageMemo[DataFrame](8)
-
-  /** The distinct (source, h) coverage spine — shared input of all
-    * three source-selection spellings (count-budget, token-budget,
-    * KMV). A real pipeline computes the coverage sets ONCE per crawl
-    * and serves every selection question from them; `dir`-keyed
-    * callers memoize through [[StageMemo.reliableStage]] (the shared-
-    * artifact tier of the two-tier checkpoint rule), constructed-frame
-    * callers (specs) get a transient local checkpoint.
-    */
-  def sourceShinglesFor(docs: DataFrame, dir: String): DataFrame =
-    if (dir.isEmpty)
-      sourceShingles(docs).localCheckpoint(false)
-    else sshMemo.getOrCompute(
-      graft.sources.Tables.dataKey(docs.sparkSession, dir, "srcsh"))(
-      graft.sources.StageMemo.reliableStage(sourceShingles(docs)))
-
-  private def sourceShingles(docs: DataFrame): DataFrame =
-    Dedup.shingles(docs.select(col("doc_id"), col("text")))
-      .join(docs.select(col("doc_id"), col("source")), "doc_id")
-      .select(col("source"), col("h")).distinct()
-      .repartition(col("h"))
-
-  /** Drop the memoized coverage spine (test lifecycle hook — the
-    * [[Dedup.clearMemos]] contract).
-    */
-  def clearMemos(): Unit = sshMemo.clear()
-
   def sourceSelect(docs: DataFrame, budget: Int = 6,
       dir: String = ""): DataFrame = {
     val spark = docs.sparkSession

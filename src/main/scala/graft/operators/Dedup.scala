@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
+import graft.sources.StageMemo
 
 /** Deduplication operators for a large-scale text corpus: exact
   * (hash-groupBy), MinHash+LSH banding, SimHash, and n-gram Jaccard
@@ -31,6 +32,9 @@ import graft.functions.TextFunctions._
   * rows (ref: src/data/raw_orders.json:53-55).
   */
 object Dedup {
+
+  /** This family's namespace in the [[StageMemo]] artifact registry. */
+  private val Owner = "Dedup"
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
@@ -292,15 +296,10 @@ object Dedup {
     * per-doc windowed-min pass); a real pipeline materializes the
     * candidate table once and both the report and the containment
     * verify read it. First caller pays the build (eager checkpoint of
-    * the few-K-row pair table); later callers ride it. Bounded by the
-    * same [[graft.sources.StageMemo]] LRU as the other stage memos.
+    * the few-K-row pair table); later callers ride it.
     */
-  private val winnowMemo = new graft.sources.StageMemo[DataFrame](16)
-
   def winnowPairsFor(c: DataFrame, dir: String): DataFrame =
-    winnowMemo.getOrCompute(
-      graft.sources.Tables.dataKey(c.sparkSession, dir) + "|winnow")(
-      graft.sources.StageMemo.reliableStage(winnowPairs(c)))
+    StageMemo.stage(Owner, c.sparkSession, dir, "winnow")(winnowPairs(c))
 
   /** Asymmetric shingle-containment verify — the doc-IN-doc detector
     * (Broder's containment, next to his resemblance/Jaccard): for
@@ -650,17 +649,6 @@ object Dedup {
        |JOIN psz sb ON sb.doc_id = p.doc_b
        |WHERE p.ni * $tDen >= (sa.sz + sb.sz - p.ni) * $tNum""".stripMargin
 
-  /** Persisted dedup index — the daily-crawl artifact: the base corpus's
-    * distinct token hashes and LSH band table written ONCE to parquet
-    * and served back as parquet-backed frames (the
-    * [[graft.sources.StageMemo.reliableStage]] discipline applied to an
-    * index a production pipeline keeps BETWEEN runs; on a cluster the
-    * path is an HDFS/object-store prefix, here the JVM tmpdir). Every
-    * consumer re-reads from storage: immune to executor memory pressure,
-    * and the shingle → signature pipeline never reruns for the base.
-    */
-  private val indexMemo = new graft.sources.StageMemo[(DataFrame, DataFrame)](8)
-
   /** App-scoped root for the persisted index stores, with a per-root JVM
     * shutdown hook that deletes that app's directory (both
     * generations): `spark.cleaner.referenceTracking.cleanCheckpoints`
@@ -695,15 +683,24 @@ object Dedup {
     root
   }
 
-  /** NOTE the memo (and the store path) key on the data DIR, not the
+  /** Persisted dedup index — the daily-crawl artifact: the base corpus's
+    * distinct token hashes and LSH band table written ONCE to parquet
+    * and served back as parquet-backed frames (the
+    * [[graft.sources.StageMemo.reliableStage]] discipline applied to an
+    * index a production pipeline keeps BETWEEN runs; on a cluster the
+    * path is an HDFS/object-store prefix, here the JVM tmpdir). Every
+    * consumer re-reads from storage: immune to executor memory pressure,
+    * and the shingle → signature pipeline never reruns for the base.
+    *
+    * NOTE the memo (and the store path) key on the data DIR, not the
     * frame: every caller for a given dir must pass the SAME canonical
     * base (here: the corpus tiers below +2e6) or the memo would serve a
     * different corpus's index — the same trap [[Classifier.scoreOn]]'s
     * scaladoc documents for the feature memo.
     */
   def dedupIndexFor(base: DataFrame, dir: String): (DataFrame, DataFrame) =
-    indexMemo.getOrCompute(
-      graft.sources.Tables.dataKey(base.sparkSession, dir, "dedup-index")) {
+    StageMemo.value[(DataFrame, DataFrame)](Owner, base.sparkSession, dir,
+        "dedup-index") {
       val spark = base.sparkSession
       val path =
         s"${indexStoreRoot(spark)}/${java.lang.Integer.toHexString(dir.hashCode)}"
@@ -793,12 +790,9 @@ object Dedup {
     */
   def mergePairsFor(base: DataFrame, incr: DataFrame, dir: String,
       minJaccard: Double = 0.5): DataFrame =
-    jpairMemo.getOrCompute(
-      graft.sources.Tables.dataKey(base.sparkSession, dir) +
-        s"|mergepairs$minJaccard") {
+    StageMemo.stage(Owner, base.sparkSession, dir, s"mergepairs$minJaccard") {
       val (tokB, bandsB) = dedupIndexFor(base, dir)
-      graft.sources.StageMemo.reliableStage(
-        incrementMergePairs(tokB, bandsB, incr, minJaccard))
+      incrementMergePairs(tokB, bandsB, incr, minJaccard)
     }
 
   /** Verified pair table of the BASE corpus served off the persisted
@@ -807,23 +801,17 @@ object Dedup {
     */
   def basePairsFor(base: DataFrame, dir: String,
       minJaccard: Double = 0.5): DataFrame =
-    jpairMemo.getOrCompute(
-      graft.sources.Tables.dataKey(base.sparkSession, dir) +
-        s"|basepairs$minJaccard") {
+    StageMemo.stage(Owner, base.sparkSession, dir, s"basepairs$minJaccard") {
       val (tokB, bandsB) = dedupIndexFor(base, dir)
-      graft.sources.StageMemo.reliableStage(
-        verifyJaccard(candidatesFromBands(bandsB), tokB, minJaccard))
+      verifyJaccard(candidatesFromBands(bandsB), tokB, minJaccard)
     }
 
   /** Base-corpus cluster table (the artifact incremental maintenance
     * updates), memoized + reliable like [[clustersFor]].
     */
   def baseClustersFor(base: DataFrame, dir: String): DataFrame =
-    clusterMemo.getOrCompute(
-      graft.sources.Tables.dataKey(base.sparkSession, dir) + "|baseclusters")(
-      graft.sources.StageMemo.reliableStage(
-        duplicateClusters(
-          basePairsFor(base, dir).select(col("doc_a"), col("doc_b")))))
+    StageMemo.stage(Owner, base.sparkSession, dir, "baseclusters")(
+      duplicateClusters(basePairsFor(base, dir).select(col("doc_a"), col("doc_b"))))
 
   /** Jaccard-threshold sensitivity histogram — the read-out a curation
     * run reads before PICKING its dedup bar (the pair-side complement of
@@ -841,9 +829,8 @@ object Dedup {
       minJaccard: Double = 0.3): DataFrame = {
     // the low-floor verified pairs are their own memoized artifact (the
     // 0.5-floor jaccardPairsFor table cannot serve them)
-    val pairs = jpairMemo.getOrCompute(
-      graft.sources.Tables.dataKey(c.sparkSession, dir) + s"|jpairs$minJaccard")(
-      graft.sources.StageMemo.reliableStage(ngramJaccardPairs(c, minJaccard)))
+    val pairs = StageMemo.stage(Owner, c.sparkSession, dir, s"jpairs$minJaccard")(
+      ngramJaccardPairs(c, minJaccard))
     val hist = pairs
       .select(floor(col("jaccard") * 20).cast("long").as("jband"))
       .groupBy(col("jband")).agg(count(lit(1)).as("n_pairs"))
@@ -940,8 +927,8 @@ object Dedup {
     */
   def compactIndex(base: DataFrame, incr: DataFrame,
       dir: String): (DataFrame, DataFrame) =
-    indexMemo.getOrCompute(
-      graft.sources.Tables.dataKey(base.sparkSession, dir, "dedup-index-gen2")) {
+    StageMemo.value[(DataFrame, DataFrame)](Owner, base.sparkSession, dir,
+        "dedup-index-gen2") {
       val spark = base.sparkSession
       val (tokB, bandsB) = dedupIndexFor(base, dir)
       val tokN = tokenHashes(incr).localCheckpoint(false)
@@ -969,8 +956,8 @@ object Dedup {
     */
   def deleteFromIndex(base: DataFrame, deleted: DataFrame,
       dir: String): (DataFrame, DataFrame) =
-    indexMemo.getOrCompute(
-      graft.sources.Tables.dataKey(base.sparkSession, dir, "dedup-index-del")) {
+    StageMemo.value[(DataFrame, DataFrame)](Owner, base.sparkSession, dir,
+        "dedup-index-del") {
       val spark = base.sparkSession
       val (tokB, bandsB) = dedupIndexFor(base, dir)
       val delIds = deleted.select(col("doc_id")).distinct().localCheckpoint(false)
@@ -1042,9 +1029,8 @@ object Dedup {
     * [[incrementalClustersFor]].
     */
   def deleteClustersFor(c: DataFrame, deleted: DataFrame, dir: String): DataFrame =
-    clusterMemo.getOrCompute(
-      graft.sources.Tables.dataKey(c.sparkSession, dir) + "|delclusters")(
-      graft.sources.StageMemo.reliableStage(deleteClusters(c, deleted, dir)))
+    StageMemo.stage(Owner, c.sparkSession, dir, "delclusters")(
+      deleteClusters(c, deleted, dir))
 
   /** One full crawl GENERATION over the persisted pair artifacts — the
     * composition a recurring-crawl pipeline runs after the snapshot diff
@@ -1093,12 +1079,8 @@ object Dedup {
     */
   def crawlPairsFor(base: DataFrame, removed: DataFrame, incr: DataFrame,
       dir: String, minJaccard: Double = 0.5): DataFrame =
-    jpairMemo.getOrCompute(
-      graft.sources.Tables.dataKey(base.sparkSession, dir) +
-        s"|crawlpairs$minJaccard") {
-      graft.sources.StageMemo.reliableStage(
-        crawlPairs(base, removed, incr, dir, minJaccard))
-    }
+    StageMemo.stage(Owner, base.sparkSession, dir, s"crawlpairs$minJaccard")(
+      crawlPairs(base, removed, incr, dir, minJaccard))
 
   /** Incremental duplicate-CLUSTER maintenance — the step after
     * [[incrementMergePairs]] in the daily-crawl loop: fold the
@@ -1174,10 +1156,8 @@ object Dedup {
   /** [[crawlClusters]] memoized as the generation's cluster ARTIFACT. */
   def crawlClustersFor(base: DataFrame, removed: DataFrame, incr: DataFrame,
       dir: String): DataFrame =
-    clusterMemo.getOrCompute(
-      graft.sources.Tables.dataKey(base.sparkSession, dir) + "|crawlclusters")(
-      graft.sources.StageMemo.reliableStage(
-        crawlClusters(base, removed, incr, dir)))
+    StageMemo.stage(Owner, base.sparkSession, dir, "crawlclusters")(
+      crawlClusters(base, removed, incr, dir))
 
   /** [[incrementalClusters]] memoized as the next-generation cluster
     * ARTIFACT (reliable checkpoint) — the fold-in runs once; serving
@@ -1185,10 +1165,8 @@ object Dedup {
     */
   def incrementalClustersFor(base: DataFrame, incr: DataFrame,
       dir: String): DataFrame =
-    clusterMemo.getOrCompute(
-      graft.sources.Tables.dataKey(base.sparkSession, dir) + "|incrclusters")(
-      graft.sources.StageMemo.reliableStage(
-        incrementalClusters(base, incr, dir)))
+    StageMemo.stage(Owner, base.sparkSession, dir, "incrclusters")(
+      incrementalClusters(base, incr, dir))
 
   /** Cross-corpus near-dedup (the INCREMENTAL dedup a growing corpus
     * needs: flag incoming docs that near-duplicate something already in
@@ -1317,30 +1295,15 @@ object Dedup {
     * so later reads are file scans that survive block-manager eviction,
     * not local-checkpoint blocks competing with execution memory),
     * later callers reuse it. Keyed by [[graft.sources.Tables.dataKey]]
-    * (sessionUUID + dir + file-listing fingerprint) so test fixtures on
+    * (session + dir + file-listing fingerprint) so test fixtures on
     * other corpora, restarted sessions, AND a regenerated dir within one
-    * session never collide. The map is a size-bounded LRU
-    * ([[graft.sources.StageMemo]]): a session that re-fingerprints a
-    * regenerated dir mints a fresh key per generation, and without
-    * eviction each generation's checkpointed table would pin its blocks
-    * for the session's lifetime. [[clearMemos]] releases everything
+    * session never collide. [[clearMemos]] releases everything
     * explicitly (e.g. between corpus generations in a long-lived
     * service).
     */
-  private val clusterMemo = new graft.sources.StageMemo[DataFrame](16)
-
   def clustersFor(c: DataFrame, dir: String): DataFrame =
-    clusterMemo.getOrCompute(
-      graft.sources.Tables.dataKey(c.sparkSession, dir))(
-      // reliable checkpoint on top of the build's own eager localCheckpoint:
-      // the extra pass costs one scan of the small cluster table; in return
-      // the MEMOIZED frame reads files, immune to block-manager eviction
-      // (the 25↔68 s x100 swing SCALEPROBE.md measured)
-      graft.sources.StageMemo.reliableStage(
-        duplicateClusters(
-          jaccardPairsFor(c, dir).select(col("doc_a"), col("doc_b")))))
-
-  private val jpairMemo = new graft.sources.StageMemo[DataFrame](8)
+    StageMemo.stage(Owner, c.sparkSession, dir, "")(
+      duplicateClusters(jaccardPairsFor(c, dir).select(col("doc_a"), col("doc_b"))))
 
   /** Memoized Jaccard-VERIFIED pair stage — the one pair table three
     * consumers share (the q_dedup_jaccard audit, the source-provenance
@@ -1350,19 +1313,15 @@ object Dedup {
     * checkpoint discipline as [[clustersFor]]).
     */
   def jaccardPairsFor(c: DataFrame, dir: String): DataFrame =
-    jpairMemo.getOrCompute(
-      graft.sources.Tables.dataKey(c.sparkSession, dir) + "|jpairs")(
-      graft.sources.StageMemo.reliableStage(ngramJaccardPairs(c)))
+    StageMemo.stage(Owner, c.sparkSession, dir, "jpairs")(ngramJaccardPairs(c))
 
-  /** Drop every memoized stage table (clusters + winnow pairs + verified
-    * pairs); their checkpoint blocks become collectable. For long-lived
-    * sessions that regenerate corpora.
+  /** Drop every memoized stage table and index of this family; their
+    * checkpoint files become collectable. For long-lived sessions that
+    * regenerate corpora.
     */
-  def clearMemos(): Unit = {
-    clusterMemo.clear(); winnowMemo.clear(); jpairMemo.clear(); indexMemo.clear()
-  }
+  def clearMemos(): Unit = StageMemo.clear(Owner)
 
-  private[graft] def memoSize: Int = clusterMemo.size
+  private[graft] def memoSize: Int = StageMemo.size(Owner)
 
   def duplicateClusters(pairs: DataFrame): DataFrame = {
     var edges = pairs

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
+import graft.sources.StageMemo
 
 /** Similarity search over ArrayType(Float) embedding columns.
   *
@@ -26,6 +27,9 @@ import graft.functions.VectorFunctions._
   * agree bit-for-bit.
   */
 object Similarity {
+
+  /** This family's namespace in the [[StageMemo]] artifact registry. */
+  private val Owner = "Similarity"
 
   val NumPlanes = 8
 
@@ -167,7 +171,7 @@ object Similarity {
     // projects down to (qid, vec_id, cos) BEFORE the top-k window — the
     // candidate rows otherwise carry BOTH 64-dim arrays through the
     // window's hash exchange (~1 KB × |queries|·cell-members ≈ 20 GB at
-    // x30; measured 31.9 s of the 38 s total in tools/ProfileMmr), while
+    // x30; measured 31.9 s of the 38 s total), while
     // the window itself needs only the 3 narrow columns.
     val cands = topK(broadcast(probes).join(store, Seq("cell"))
         .filter(col("vec_id") =!= col("qid"))
@@ -1687,12 +1691,8 @@ object Similarity {
         // output frame is the served artifact" posture the cold-build
         // scaladoc already prescribes for rotatedCorpus2.
         if (dir.isEmpty || (rot eq e)) rot
-        else rotMemo.getOrCompute(
-          graft.sources.Tables.dataKey(e.sparkSession, dir, s"opqrot1|$dims"))(
-          graft.sources.StageMemo.reliableStage(rot))
+        else StageMemo.stage(Owner, e.sparkSession, dir, s"opqrot1|$dims")(rot)
     }
-
-  private val rotMemo = new graft.sources.StageMemo[DataFrame](8)
 
   /** OPQ ANN — [[knnPq]] over the rotated corpus: identical byte budget
     * (m codes from the same label-count codebook), identical ADC scan;
@@ -1826,9 +1826,7 @@ object Similarity {
         cands(scores.min._2)
       }
       if (dir.isEmpty) pick()
-      else opq2Memo.getOrCompute(
-        graft.sources.Tables.dataKey(e.sparkSession, dir, s"opq2sel|$dims"))(
-        graft.sources.StageMemo.reliableStage(pick()))
+      else StageMemo.stage(Owner, e.sparkSession, dir, s"opq2sel|$dims")(pick())
     }
   }
 
@@ -1845,9 +1843,8 @@ object Similarity {
         .as("embedding"))
     val fit =
       if (dir.isEmpty) powerIterationFit(masked, dims)
-      else pcMemo.getOrCompute(
-        graft.sources.Tables.dataKey(e.sparkSession, dir, s"opqpc2|$dims"))(
-        powerIterationFit(masked, dims))
+      else StageMemo.value[Option[(Array[Double], Array[Double], Double)]](
+        Owner, e.sparkSession, dir, s"opqpc2|$dims")(powerIterationFit(masked, dims))
     fit match {
       // lam == 0 means the deflated corpus had zero quantized variance
       // (the power iteration kept its uniform seed iterate): no real
@@ -1870,8 +1867,6 @@ object Similarity {
   private[graft] def opq2CandidateSses(e: DataFrame, dir: String,
       dims: Int = 64): Seq[BigInt] =
     opq2Candidates(e, dir, dims).map(c => pqSse(c, PqSubspaces))
-
-  private val opq2Memo = new graft.sources.StageMemo[DataFrame](8)
 
   /** Required objective improvement, in basis points (1/10000), for the
     * alternation to replace the incumbent rotation.
@@ -2289,11 +2284,8 @@ object Similarity {
     */
   def pqrCodebookTrainedFor(e: DataFrame, dir: String, m: Int = PqSubspaces,
       c: Int = PqrCodes, iters: Int = 1): DataFrame =
-    centsMemo.getOrCompute(
-      graft.sources.Tables.dataKey(e.sparkSession, dir, "pqrcbt") +
-        s"|$m|$c|$iters")(
-      graft.sources.StageMemo.reliableStage(
-        pqrCodebookTrained(e, kmeansFitMemo(e, dir, "all"), m, c, iters)))
+    StageMemo.stage(Owner, e.sparkSession, dir, s"pqrcbt|$m|$c|$iters")(
+      pqrCodebookTrained(e, kmeansFitMemo(e, dir, "all"), m, c, iters))
 
   /** Residual-encoded IVF-PQ search over the TRAINED coarse quantizer —
     * the unification the round-10 verdict asked for: every prior search
@@ -2725,13 +2717,10 @@ object Similarity {
     * centroids are eagerly checkpointed (k rows — trivial) so the
     * memoized frame is a short plan safe to reuse across queries.
     */
-  private val centsMemo = new graft.sources.StageMemo[DataFrame](16)
-
   def kmeansFitMemo(e: DataFrame, dir: String, variant: String,
       k: Int = 8, iters: Int = 2): DataFrame =
-    centsMemo.getOrCompute(
-      graft.sources.Tables.dataKey(e.sparkSession, dir, variant) + s"|$k|$iters")(
-      graft.sources.StageMemo.reliableStage(kmeansFit(e, k, iters)))
+    StageMemo.stage(Owner, e.sparkSession, dir, s"$variant|$k|$iters")(
+      kmeansFit(e, k, iters))
 
   /** Memoized [[pqrCodebook]] — the residual codebook is a trained
     * artifact like the k-means centroids (a real pipeline trains it
@@ -2740,10 +2729,8 @@ object Similarity {
     */
   def pqrCodebookFor(e: DataFrame, dir: String, m: Int = PqSubspaces,
       c: Int = PqrCodes, iters: Int = 1): DataFrame =
-    centsMemo.getOrCompute(
-      graft.sources.Tables.dataKey(e.sparkSession, dir, "pqrcb") +
-        s"|$m|$c|$iters")(
-      graft.sources.StageMemo.reliableStage(pqrCodebook(e, m, c, iters)))
+    StageMemo.stage(Owner, e.sparkSession, dir, s"pqrcb|$m|$c|$iters")(
+      pqrCodebook(e, m, c, iters))
 
   /** Greedy k-center coreset selection (Gonzalez'85 farthest-point
     * traversal): start from the smallest vec_id, then k−1 times add the
@@ -2807,9 +2794,7 @@ object Similarity {
     * once and serves assignments/audits from the frozen k-row table.
     */
   def kCenterFitMemo(e: DataFrame, dir: String, k: Int = 8): DataFrame =
-    centsMemo.getOrCompute(
-      graft.sources.Tables.dataKey(e.sparkSession, dir, "kcenter") + s"|$k")(
-      graft.sources.StageMemo.reliableStage(kCenterFit(e, k)))
+    StageMemo.stage(Owner, e.sparkSession, dir, s"kcenter|$k")(kCenterFit(e, k))
 
   /** Drop every memoized artifact of this family (same lifecycle
     * contract as [[Dedup.clearMemos]]): centroid tables,
@@ -2822,12 +2807,9 @@ object Similarity {
     * r13) — corpus regeneration must come through here, the documented
     * memo lifecycle.
     */
-  def clearMemos(): Unit = {
-    centsMemo.clear(); pcMemo.clear(); opq2Memo.clear(); rotMemo.clear()
-    probeCountMemo.clear()
-  }
+  def clearMemos(): Unit = { StageMemo.clear(Owner); probeCountMemo.clear() }
 
-  private[graft] def memoSize: Int = centsMemo.size
+  private[graft] def memoSize: Int = StageMemo.size(Owner)
 
   /** Semantic topic profile — the cross-modal "what lives in each
     * embedding cluster" audit a curation run reads before reweighting:
@@ -3757,14 +3739,10 @@ object Similarity {
 
   // The fit is shared by the pc1 audit and the ablation pass — same
   // memo discipline as kmeansFitMemo (bounded driver-side arrays).
-  private val pcMemo =
-    new graft.sources.StageMemo[Option[(Array[Double], Array[Double], Double)]](8)
-
   def powerIterationMemo(e: DataFrame, dir: String, dims: Int = 64,
       iters: Int = 4): Option[(Array[Double], Array[Double], Double)] =
-    pcMemo.getOrCompute(
-      graft.sources.Tables.dataKey(e.sparkSession, dir, s"pc1|$dims|$iters"))(
-      powerIterationFit(e, dims, iters))
+    StageMemo.value[Option[(Array[Double], Array[Double], Double)]](
+      Owner, e.sparkSession, dir, s"pc1|$dims|$iters")(powerIterationFit(e, dims, iters))
 
   /** Per-dimension moment audit: mean, variance, std and each
     * dimension's share of total variance — the diagonal-whitening /

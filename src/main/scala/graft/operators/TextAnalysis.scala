@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
+import graft.sources.StageMemo
 
 /** Text-analysis operators over the documents table: token statistics,
   * quality scoring, language identification, document fingerprinting.
@@ -13,6 +14,9 @@ import graft.functions.TextFunctions._
   * documents table is 100 TB: pure map, embarrassingly parallel.
   */
 object TextAnalysis {
+
+  /** This family's namespace in the [[StageMemo]] artifact registry. */
+  private val Owner = "TextAnalysis"
 
   /** Stopword list used by quality scoring (inlined identically in the
     * DuckDB oracle).
@@ -1432,27 +1436,20 @@ object TextAnalysis {
     * like the k-means centroids and PQ codebooks: four queries
     * (q_doc_bpe_encode / bpepack / bpepackstats, plus any future
     * tokenizer-cost consumer) each need the trained segmentation, and a
-    * real pipeline trains the tokenizer ONCE. Reliable-checkpointed
-    * (the [[graft.sources.StageMemo]] two-tier discipline — this is a
-    * cross-query shared artifact by definition); the per-round merge
+    * real pipeline trains the tokenizer ONCE. The per-round merge
     * table (q_doc_bpe) keeps its own training run because it reads the
     * ROUNDS, not the final dict.
     */
-  private val bpeMemo = new graft.sources.StageMemo[DataFrame](8)
-
   def bpeDictFor(docs: DataFrame, dir: String, merges: Int = 8,
       maxWords: Int = 50000): DataFrame =
-    bpeMemo.getOrCompute(
-      graft.sources.Tables.dataKey(docs.sparkSession, dir,
-        s"bpedict|$merges|$maxWords"))(
-      graft.sources.StageMemo.reliableStage(
-        bpeTrain(docs, merges, maxWords)._2
-          .select(col("word"), size(col("syms")).as("n_sub"))))
+    StageMemo.stage(Owner, docs.sparkSession, dir, s"bpedict|$merges|$maxWords")(
+      bpeTrain(docs, merges, maxWords)._2
+        .select(col("word"), size(col("syms")).as("n_sub")))
 
   /** Drop the memoized dictionary (corpus-regeneration lifecycle, same
     * contract as the sibling memos).
     */
-  def clearMemos(): Unit = bpeMemo.clear()
+  def clearMemos(): Unit = StageMemo.clear(Owner)
 
   /** BPE APPLY + fertility audit — the read-out side of [[bpeMerges]]:
     * segment every document under the trained merge table and report,

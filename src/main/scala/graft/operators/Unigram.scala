@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
+import graft.sources.StageMemo
 
 /** Unigram-LM subword tokenizer training (Kudo, ACL'18 "Subword
   * Regularization" / the SentencePiece unigram model) — the second
@@ -40,6 +41,9 @@ import graft.functions.TextFunctions._
   * stream); this is part of the driver-mandated LLM-data-pipeline layer.
   */
 object Unigram {
+
+  /** This family's namespace in the [[StageMemo]] artifact registry. */
+  private val Owner = "Unigram"
 
   /** Seed-candidate cap (most frequent substrings by occurrence-weighted
     * count), post-EM vocabulary cap (single characters always survive on
@@ -409,19 +413,14 @@ object Unigram {
 
   /** Memoized trained-tokenizer artifact (word → piece count under the
     * FINAL vocabulary) per (session, dir) — the [[TextAnalysis.bpeDictFor]]
-    * contract: trained once, served frozen to every consumer
-    * (reliable-checkpointed, the StageMemo tier-2 rule).
+    * contract: trained once, served frozen to every consumer.
     */
-  private val dictMemo = new graft.sources.StageMemo[DataFrame](8)
-
   def unigramDictFor(docs: DataFrame, dir: String, seedV: Int = SeedV,
       vocabV: Int = VocabV, maxLen: Int = MaxLen, emRounds: Int = EmRounds,
       maxWords: Int = MaxWords): DataFrame =
-    dictMemo.getOrCompute(
-      graft.sources.Tables.dataKey(docs.sparkSession, dir,
-        s"unigramdict|$seedV|$vocabV|$maxLen|$emRounds|$maxWords"))(
-      graft.sources.StageMemo.reliableStage(
-        unigramDict(docs, seedV, vocabV, maxLen, emRounds, maxWords)))
+    StageMemo.stage(Owner, docs.sparkSession, dir,
+      s"unigramdict|$seedV|$vocabV|$maxLen|$emRounds|$maxWords")(
+      unigramDict(docs, seedV, vocabV, maxLen, emRounds, maxWords))
 
   /** Unmemoized dictionary: (word, n_sub) under the trained vocabulary. */
   def unigramDict(docs: DataFrame, seedV: Int = SeedV, vocabV: Int = VocabV,
@@ -433,7 +432,7 @@ object Unigram {
   }
 
   /** Drop the memoized dictionary (corpus-regeneration lifecycle). */
-  def clearMemos(): Unit = dictMemo.clear()
+  def clearMemos(): Unit = StageMemo.clear(Owner)
 
   /** Unigram APPLY + fertility audit — `q_doc_unigram_encode`, the
     * [[TextAnalysis.bpeSegment]] read-out under the unigram tokenizer:

@@ -13,9 +13,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType, Tim
 object Tables {
   private def p(dir: String, name: String) = s"$dir/$name.parquet"
 
-  /** Session+data-scoped memoization key for stage memos
-    * ([[graft.operators.Dedup.clustersFor]],
-    * [[graft.operators.Similarity.kmeansFitMemo]]). Two requirements a
+  /** Session+data-scoped memoization key for the [[StageMemo]] artifact
+    * registry and the scan-frame memo below. Two requirements a
     * plain `identityHashCode(session)+dir` key misses:
     * (1) the driver regenerates the parquet tables between rounds — if a
     * session ever spans a regeneration of the SAME dir, a dir-keyed memo
@@ -24,8 +23,7 @@ object Tables {
     * order-independent XOR so FS listing order can't flap the key);
     * (2) `identityHashCode` can collide across GC'd sessions — `sessionUUID`
     * is unique for the JVM's lifetime. Stale entries from a regenerated dir
-    * are abandoned, not evicted: each memo holds one small checkpointed
-    * table per (session, dir, variant), bounded for any realistic session.
+    * are never hit again and age out of the memo's LRU bound.
     */
   def dataKey(spark: SparkSession, dir: String, variant: String = ""): String =
     sessionId(spark) + "|" + dir + "|" + fingerprint(spark, dir) +
@@ -116,9 +114,9 @@ object Tables {
     */
   private val frameMemo = new StageMemo[DataFrame](64)
 
-  private def load(spark: SparkSession, dir: String, name: String,
-      conditioned: Boolean = true)(mk: => DataFrame): DataFrame = {
-    val reb = conditioned && rebalanceOn(spark) && RebalancedTables(name)
+  private def load(spark: SparkSession, dir: String, name: String)(
+      mk: => DataFrame): DataFrame = {
+    val reb = rebalanceOn(spark) && RebalancedTables(name)
     frameMemo.getOrCompute(dataKey(spark, dir, "tbl:" + name) +
       "|reb:" + reb + ":" + spark.sparkContext.defaultParallelism)(
       if (reb) balanced(spark, dir, name, mk) else mk)
@@ -191,26 +189,6 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "part")(ntzToUtc(spark.read.parquet(p(dir, "part"))))
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")(ntzToUtc(spark.read.parquet(p(dir, "orders"))))
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")(ntzToUtc(spark.read.parquet(p(dir, "lineitem"))))
-
-  /** The conditioner-free fact-table loaders — the call-site opt-out of
-    * [[balanced]]. The small-scan rebalance is an INPUT-shape fix whose
-    * payoff scales with downstream per-row work; a consumer whose whole
-    * downstream is one trivial aggregate / top-k heap / immediate
-    * re-exchange on another key pays the conditioner's extra stage
-    * without amortizing it (driver r90-vs-r13 evidence: q_distinct
-    * 0.48×, q_window_rank 0.58×, q_topk 0.61× — each a few-hundred-ms
-    * absolute tax). The cost lives in the consumer's expression tree,
-    * not in any cardinality the loader (or Spark's CBO) can see, so the
-    * call site declares it — the same per-query plan-shape discipline as
-    * the hand-placed broadcast/shuffle_hash hints. Result-identical by
-    * construction (the conditioner only reorders rows).
-    */
-  def ordersUnconditioned(spark: SparkSession, dir: String): DataFrame =
-    load(spark, dir, "orders", conditioned = false)(
-      ntzToUtc(spark.read.parquet(p(dir, "orders"))))
-  def lineitemUnconditioned(spark: SparkSession, dir: String): DataFrame =
-    load(spark, dir, "lineitem", conditioned = false)(
-      ntzToUtc(spark.read.parquet(p(dir, "lineitem"))))
   def documents(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "documents")(ntzToUtc(spark.read.parquet(p(dir, "documents"))))
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")(ntzToUtc(spark.read.parquet(p(dir, "embeddings"))))
 

@@ -54,7 +54,7 @@ object Profile {
         .select(col("key"), col("value"))
     }
 
-    // curation breakdown (see ProfileGate for clean-process gate timings —
+    // curation breakdown (see ProfileQuery for clean-process timings —
     // cache()/persist() probes in a shared process contaminate later
     // stages via CacheManager plan substitution)
     import graft.operators.{Curation, Dedup, TextAnalysis}

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 
 import graft.expressions.CdcChunks
 import graft.operators.Dedup
@@ -16,10 +17,17 @@ import graft.sources.Tables
   * sub-document dedup still matches. Fixed-stride blocks shift globally
   * on the same edit (asserted as the contrast case).
   */
-class CdcSpec extends SparkSpec {
+class CdcSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
 
   private lazy val docs = Tables.documents(spark, Sf).cache()
+
+  // docs is the shared memoized Tables.documents frame: left cached, every
+  // later suite in this JVM would plan its corpus over InMemoryRelation
+  override def afterAll(): Unit = {
+    Seq(deduped, corpus, docs).foreach(_.unpersist())
+    super.afterAll()
+  }
 
   private def chunksOf(text: String): Seq[String] = {
     val arr = CdcChunks.chunks(org.apache.spark.unsafe.types.UTF8String.fromString(text))
