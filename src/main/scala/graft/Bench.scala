@@ -1,52 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // core conf, read once at SparkContext construction (see Engine.session)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Engine.tune(spark)
+    val spark = Engine.session("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
-    // Warm on the MEASURED scale factor, not sf0.001: the first timed query
-    // otherwise absorbs this SF's one-time setup — parquet footer reads and
-    // scan-path initialization — on top of JVM/codegen JIT (r3 driver bench:
-    // q_scalar 16.6 s first-in-map vs 1.25 s idle rerun; r2 had the same
-    // artifact on ref_sql). A noop scan of every table touches footers,
-    // dictionary pages, and the vectorized-reader path for real.
-    val warmTables = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "documents", "embeddings", "events")
-    warmTables.foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet")
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
-    // …and one end-to-end query for agg/join codegen JIT.
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    // Warm on the MEASURED scale factor, not sf0.001 (see QueryRun.warm).
+    QueryRun.warm(spark, sfDir)
     // optional args = query-name filter (dev profiling; the driver passes none)
     val selected =
-      if (args.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(args.toSet).toMap
+      if (args.isEmpty) SparkEntry.queries.keys
+      else SparkEntry.queries.keys.filter(args.toSet)
     // noop sink: forces every output column to be fully computed —
     // count() would let Catalyst prune the projection and under-measure
-    // map-heavy queries. A failed query must not read as a fast success:
-    // mark it -1.
-    def timeOnce(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
-      try {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name: ${e.getMessage}"); -1.0
-      }
+    // map-heavy queries. A failed or timed-out query must not read as a
+    // fast success: mark it -1.
+    def timeOnce(name: String): Double = {
+      val o = QueryRun(spark, name, sfDir, QueryRun.Deadline)(
+        _.write.format("noop").mode("overwrite").save())
+      if (o.ok) o.totalS
+      else { System.err.println(s"[bench] $name: ${o.failure}"); -1.0 }
+    }
     // min of 2 runs: a shared driver machine inflated r5 readings 15-18×
     // (q1_agg 25.94 s driver vs 1.40 s idle) — two timings make one noisy
     // neighbor unable to paint a phantom hotspot, and the min is the
@@ -65,18 +38,18 @@ object Bench {
     // A failed t3 after two SUCCESSFUL runs falls back to min(t1, t2)
     // rather than reporting the query failed — the de-noising retry must
     // not introduce a failure mode the 2-run spelling didn't have.
-    val timed = selected.map { case (name, fn) =>
-      val t1 = timeOnce(name, fn)
-      val t2 = if (t1 >= 0) timeOnce(name, fn) else t1
+    val timed = selected.map { name =>
+      val t1 = timeOnce(name)
+      val t2 = if (t1 >= 0) timeOnce(name) else t1
       val ran3 = t1 >= 0 && t2 >= 0 && t1 > 1.5 * t2
-      val t3 = if (ran3) timeOnce(name, fn) else t1
+      val t3 = if (ran3) timeOnce(name) else t1
       val mn =
         if (t1 < 0 || t2 < 0) -1.0
         else if (t3 < 0) math.min(t1, t2)
         else math.min(math.min(t1, t2), t3)
       val samples = if (t1 < 0) Seq(t1) else if (ran3) Seq(t1, t2, t3) else Seq(t1, t2)
       name -> ((mn, samples))
-    }
+    }.toMap
     val results = timed.map { case (k, (mn, _)) => k -> mn }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")

@@ -2,73 +2,63 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the graft engine.
+/** Session factory for the graft engine: the one place a session is built.
   *
-  * Tuned for the driver's local[32] single-JVM harness but configured the
-  * way a 1000-executor cluster job would be: AQE on (runtime re-plan,
-  * skew-join splitting, partition coalescing), UTC session time zone
-  * (oracle parity), and shuffle partitions sized to the actual
-  * parallelism instead of the 200 default.
+  * Configured the way a 1000-executor cluster job would be: AQE on
+  * (runtime re-plan, skew-join splitting, partition coalescing), UTC
+  * session time zone (oracle parity), and shuffle partitions sized to the
+  * actual parallelism instead of the 200 default.
   */
 object Engine {
-  val ShufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+  /** Local cores and base shuffle width: `SPARK_GRAFT_CPUS`, else every
+    * core of the machine. */
+  val ShufflePartitions: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  /** AQE's coalesce starting width: 16× the base parallelism. The
-    * big-cluster posture is "start wide, let AQE coalesce down by bytes":
-    * a corpus 30× the reference size then simply FILLS more of the
-    * initial partitions instead of needing a manual
-    * `spark.sql.shuffle.partitions` bump (the override the scale probe
-    * used to carry past x30 — a SHUFFLE_HASH build map at fixed width
-    * grows linearly with the corpus and OOMs; at initial width ∝ high
-    * constant, per-partition state stays bounded through the probed
-    * range and a real deployment ties this knob to data volume).
-    * Byte-based coalescing still folds tiny-but-compute-bound shuffles
-    * to few tasks, so those paths keep their explicitly NUMBERED
-    * repartitions, which AQE does not coalesce (the q_er_recall lesson).
+  /** A `local[cores]` session with `cores` shuffle partitions. The
+    * builder carries only those and the core confs read once at
+    * SparkContext construction; every runtime conf comes from [[tune]].
     */
-  val InitialPartitions: Int =
-    sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS",
-      (ShufflePartitions * 16).toString).toInt
-
-  def session(appName: String = "graft", master: String = s"local[$ShufflePartitions]"): SparkSession = {
+  def session(appName: String = "graft", cores: Int = ShufflePartitions): SparkSession = {
     val spark = SparkSession
       .builder()
-      .master(master)
+      .master(s"local[$cores]")
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", ShufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       // StageMemo.reliableStage writes RELIABLE checkpoints (files under
       // the checkpoint dir). Let the ContextCleaner delete the backing
       // files once LRU eviction / clearMemos drops the last reference —
       // otherwise a long-lived session that regenerates corpora
-      // accumulates unbounded data under /tmp/graft-ckpt/<appId>. Core
-      // conf, read ONCE at SparkContext construction: it must be set on
-      // the builder (tune() would be too late).
+      // accumulates unbounded data under /tmp/graft-ckpt/<appId>.
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     tune(spark)
-    spark
   }
 
-  /** Apply engine runtime confs to an externally-created session (the
-    * driver's Verify/Bench sessions call this so queries see the same
-    * plan-shaping settings everywhere).
+  /** Apply engine runtime confs to a session, so queries see the same
+    * plan-shaping settings everywhere.
     */
   def tune(spark: SparkSession): SparkSession = {
     val c = spark.conf
     c.set("spark.sql.adaptive.enabled", "true")
     c.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    // scale-adaptive shuffle width: start at InitialPartitions and let
-    // AQE coalesce down (parallelismFirst keeps small-partition merging
-    // bounded at minPartitionSize, preserving parallelism). shuffle
-    // .partitions stays at the base width for the non-AQE paths
-    // (streaming state stores key their layout off it).
+    // Scale-adaptive shuffle width: AQE's coalesce starts at 16× the base
+    // parallelism. The big-cluster posture is "start wide, let AQE
+    // coalesce down by bytes": a corpus 30× the reference size then
+    // simply FILLS more of the initial partitions instead of needing a
+    // manual `spark.sql.shuffle.partitions` bump (a SHUFFLE_HASH build
+    // map at fixed width grows linearly with the corpus and OOMs; at
+    // initial width ∝ high constant, per-partition state stays bounded
+    // through the probed range). parallelismFirst keeps small-partition
+    // merging bounded at minPartitionSize. shuffle.partitions stays at
+    // the base width for the non-AQE paths (streaming state stores key
+    // their layout off it). Byte-based coalescing still folds
+    // tiny-but-compute-bound shuffles to few tasks, so those paths keep
+    // their explicitly NUMBERED repartitions, which AQE does not
+    // coalesce (the q_er_recall lesson).
     c.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-      InitialPartitions.toString)
+      (16 * spark.sparkContext.defaultParallelism).toString)
     // without this, CACHED plans keep AQE but skip the coalesce step
     // (their output partitioning is frozen) — the iterative CC loop
     // caches every round, and at a wide initial width each round would

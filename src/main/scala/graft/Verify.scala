@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,23 +7,14 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // extra args = run only these queries (dev loop; driver passes none)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // core conf, read once at SparkContext construction (see Engine.session)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Engine.tune(spark)
+    val spark = Engine.session("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     // The localCheckpoint cleaner races the DAGScheduler's accumulator
     // drain — DURING the dump loop, not just at shutdown (judge r13 log:
     // "ERROR DAGScheduler: Failed to update accumulator" traces mid-run,
     // exit 0, all queries pass). Those traces read like failures but
-    // aren't: a real query failure surfaces as an exception from the
-    // dump call and prints "[verify] <name> failed" here. Silence
+    // aren't: a real query failure (exception or timeout) prints
+    // "[verify] <name> failed" below. Silence
     // exactly the two racing classes for the whole run (scoped, NOT a
     // global OFF — every other logger keeps WARN, so a genuine stop-time
     // failure stays visible; the ADVICE-r13 scoping rule).
@@ -34,9 +24,9 @@ object Verify {
         cls, org.apache.logging.log4j.Level.FATAL)
     }
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    SparkEntry.queries.keys
+      .filter(name => only.isEmpty || only(name))
+      .foreach { name =>
       // Drop any previous dump FIRST: a query that now fails must leave no
       // stale (previously-passing) parquet behind for the driver's compare
       // to silently validate.
@@ -47,10 +37,10 @@ object Verify {
       if (dest.exists()) rm(dest)
       // repartition(1), not coalesce(1): coalesce propagates up through
       // narrow plans and would run shuffle-free queries on a single core
-      try fn(spark, sfDir).repartition(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      val o = QueryRun(spark, name, sfDir, QueryRun.Deadline)(
+        _.repartition(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+      if (!o.ok) {
+        System.err.println(s"[verify] $name failed: ${o.failure}")
         if (dest.exists()) rm(dest)
       }
     }

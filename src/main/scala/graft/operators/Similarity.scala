@@ -1580,13 +1580,7 @@ object Similarity {
       probeRows: => Long, rowBytes: Long,
       maxBytes: Long = MaxProbeBroadcastBytes,
       storeBytes: => Long = -1L): DataFrame = {
-    // measurement knob (ScaleProbe's forced-fallback appendix rows): the
-    // salted path only engages past a 256 MB probe side, which no test
-    // corpus reaches — this conf forces it so its cost story is
-    // MEASURED, not asserted (r13 verdict #4)
-    val forceSalt = store.sparkSession.conf
-      .get("spark.graft.serving.forceSalt", "false").toBoolean
-    if (!forceSalt && probeRows * rowBytes <= maxBytes)
+    if (probeRows * rowBytes <= maxBytes)
       store.join(broadcast(probes), Seq("cell"))
     else {
       val conf = store.sparkSession.sessionState.conf

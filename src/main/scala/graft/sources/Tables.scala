@@ -13,6 +13,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType, Tim
 object Tables {
   private def p(dir: String, name: String) = s"$dir/$name.parquet"
 
+  /** Every table of a data directory, stored as `<dir>/<name>.parquet`. */
+  val Names: Seq[String] = Seq("region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "documents", "embeddings", "events")
+
   /** Session+data-scoped memoization key for the [[StageMemo]] artifact
     * registry and the scan-frame memo below. Two requirements a
     * plain `identityHashCode(session)+dir` key misses:

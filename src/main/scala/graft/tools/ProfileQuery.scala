@@ -1,9 +1,8 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-import graft.{Engine, SparkEntry}
+import graft.{Engine, QueryRun}
 
 /** Dev profiling harness for ONE declared query: runs it `reps` times
   * against the bench's noop sink and prints, per run, the wall time split
@@ -13,26 +12,21 @@ import graft.{Engine, SparkEntry}
   * tiny actions), or one hot stage, before touching any code.
   *
   * Usage: dev/run.sh graft.tools.ProfileQuery <query> [reps] [sfDir]
+  * Runtime confs: SPARK_GRAFT_CONF="k=v;k2=v2"; SPARK_GRAFT_FINALPLAN=1
+  * prints the post-AQE executed plans.
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q1_agg")
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(4)
     val sfDir = args.drop(2).headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-    // ad-hoc conf experiments: SPARK_GRAFT_CONF="k=v;k2=v2"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    Engine.tune(spark)
+    val spark = Engine.session("graft-profile")
+    // ad-hoc runtime conf experiments: SPARK_GRAFT_CONF="k=v;k2=v2" (core
+    // confs go in as -Dspark.* system properties)
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
       .foreach { kv => val Array(k, v) = kv.split("=", 2)
-        try spark.conf.set(k, v) catch { case _: Throwable => () } })
+        try spark.conf.set(k, v)
+        catch { case e: Throwable => System.err.println(s"[pq] $k not set: ${e.getMessage}") } })
     spark.sparkContext.setLogLevel("WARN")
 
     case class JobRec(id: Int, desc: String, start: Long, var end: Long = 0L,
@@ -67,26 +61,16 @@ object ProfileQuery {
             qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
       })
 
-    val fn = SparkEntry.queries(name)
-    // the bench's warm pass
-    Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "documents", "embeddings", "events").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet")
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
+    QueryRun.warm(spark, sfDir)
     (1 to reps).foreach { i =>
       jobs.synchronized(jobs.clear())
-      val t0 = System.nanoTime()
-      val df = fn(spark, sfDir)
-      val t1 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      val t2 = System.nanoTime()
+      val o = QueryRun(spark, name, sfDir)(_.write.format("noop").mode("overwrite").save())
+      if (!o.ok) System.err.println(s"[pq] $name run$i: ${o.failure}")
       Thread.sleep(150) // let the listener bus drain
       val (njobs, jobWall) = jobs.synchronized {
         (jobs.size, jobs.map(j => math.max(0L, j.end - j.start)).sum)
       }
-      println(f"[pq] $name run$i: total ${(t2 - t0) / 1e9}%7.3f s  construct ${(t1 - t0) / 1e9}%6.3f  exec ${(t2 - t1) / 1e9}%7.3f  jobs $njobs%3d  jobWall ${jobWall / 1e3}%7.3f s")
+      println(f"[pq] $name run$i: total ${o.totalS}%7.3f s  construct ${o.constructS}%6.3f  exec ${o.totalS - o.constructS}%7.3f  jobs $njobs%3d  jobWall ${jobWall / 1e3}%7.3f s")
       if (i == reps) jobs.synchronized {
         jobs.foreach { j =>
           println(f"[pq]   job ${j.id}%4d ${(j.end - j.start) / 1e3.toDouble}%8.3f s  ${j.desc.take(50)}")

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Engine, SparkEntry}
+import graft.{Engine, QueryRun, SparkEntry}
 
 /** Empirical scale probe for the heavy dedup/ANN family: measures the
   * wall-clock growth of the five most expensive pipelines between an
@@ -40,7 +40,8 @@ import graft.{Engine, SparkEntry}
   * one-time cluster build, q_pipeline_e2e rides the memo — the same
   * accounting at both scales, mirroring Bench.
   *
-  * Usage: dev/run.sh graft.tools.ScaleProbe [mult …]   (default: 1 10)
+  * Usage: dev/run.sh graft.tools.ScaleProbe [mult …] [query …]
+  * (default: scales 1 10, every probe query)
   * Writes synthetic tables under /tmp/graft-scale/x<mult>/ (reused if
   * present) and prints one JSON line per (query, scale) plus a summary
   * with exponents and a pass/fail verdict at exponent <= 1.30.
@@ -278,32 +279,19 @@ object ScaleProbe {
   }
 
   private def timeQuery(spark: SparkSession, name: String, dir: String): Double = {
-    val t0 = System.nanoTime()
-    SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
+    val o = QueryRun(spark, name, dir)(_.write.format("noop").mode("overwrite").save())
+    if (!o.ok) sys.error(s"$name on $dir: ${o.failure}")
+    o.totalS
   }
 
   def main(args: Array[String]): Unit = {
-    val mults = if (args.isEmpty) Seq(1, 10) else args.map(_.toInt).toSeq
-    // dev knob: SPARK_GRAFT_PROBE_ONLY=q_a,q_b re-measures a subset
-    // (e.g. after a targeted plan fix) without paying the full sweep
-    val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val probeSet = only.map(o => ProbeQueries.filter(o)).getOrElse(ProbeQueries)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Engine.tune(spark)
+    // numeric args = scale multipliers; any other arg = a query filter
+    // (re-measure a subset, e.g. after a targeted plan fix)
+    val (nums, only) = args.toSeq.partition(_.toIntOption.isDefined)
+    val mults = if (nums.isEmpty) Seq(1, 10) else nums.map(_.toInt)
+    val probeSet = if (only.isEmpty) ProbeQueries else ProbeQueries.filter(only.toSet)
+    val spark = Engine.session("graft-scaleprobe")
     spark.sparkContext.setLogLevel("WARN")
-    // dev knob: SPARK_GRAFT_FORCE_SALT=1 forces every servingScanJoin
-    // through its salted-shuffle fallback, so the fallback's cost story
-    // at probe scales is measured, not asserted (its organic trigger is
-    // a >256 MB probe side no test corpus reaches)
-    if (sys.env.get("SPARK_GRAFT_FORCE_SALT").contains("1"))
-      spark.conf.set("spark.graft.serving.forceSalt", "true")
 
     // JIT warmup on the tiny real tables: distinct dir → distinct memo
     // keys, so the timed runs below stay cold on their own data

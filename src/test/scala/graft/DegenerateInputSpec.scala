@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import graft.sources.Tables
+
 /** Robustness sweep #2: every document-family query must run to
   * completion on DEGENERATE ROW VALUES — empty text, whitespace-only
   * text, one- and two-token docs, and NULL text. At 100 TB every one of
@@ -15,8 +17,7 @@ class DegenerateInputSpec extends SparkSpec {
 
   private lazy val degDir: String = {
     val d = Files.createTempDirectory("graft-degenerate").toString
-    val tables = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "events", "embeddings")
+    val tables = Tables.Names.filterNot(_ == "documents")
     tables.foreach { t =>
       spark.read.parquet(s"$Sf/$t.parquet")
         .write.mode("overwrite").parquet(s"$d/$t.parquet")
@@ -59,8 +60,7 @@ class DegenerateInputSpec extends SparkSpec {
     */
   private lazy val degEmbDir: String = {
     val d = Files.createTempDirectory("graft-degemb").toString
-    val tables = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "events", "documents")
+    val tables = Tables.Names.filterNot(_ == "embeddings")
     tables.foreach { t =>
       spark.read.parquet(s"$Sf/$t.parquet")
         .write.mode("overwrite").parquet(s"$d/$t.parquet")
@@ -100,8 +100,7 @@ class DegenerateInputSpec extends SparkSpec {
     */
   private lazy val degEvDir: String = {
     val d = Files.createTempDirectory("graft-degev").toString
-    val tables = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "documents", "embeddings")
+    val tables = Tables.Names.filterNot(_ == "events")
     tables.foreach { t =>
       spark.read.parquet(s"$Sf/$t.parquet")
         .write.mode("overwrite").parquet(s"$d/$t.parquet")

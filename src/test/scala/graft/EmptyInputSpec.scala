@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import graft.sources.Tables
+
 /** Robustness: EVERY declared query must run to completion on 0-row
   * inputs (correct schemas, no data). Empty partitions are routine at
   * 100 TB — a filter can drain any table — and operators must degrade to
@@ -15,8 +17,7 @@ class EmptyInputSpec extends SparkSpec {
 
   private lazy val emptyDir: String = {
     val d = Files.createTempDirectory("graft-empty").toString
-    val tables = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "events", "documents", "embeddings")
+    val tables = Tables.Names
     // limit(0) through the RAW reader preserves each table's on-disk
     // schema (events keeps its nanos-as-long ts column)
     tables.foreach { t =>

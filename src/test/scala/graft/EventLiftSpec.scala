@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import graft.sources.Tables
+
 /** q_ev_lift on a hand-computed fixture: presence (not frequency)
   * semantics, exact lift arithmetic, canonical type_a < type_b pairs,
   * and null user/type tolerance.
@@ -11,8 +13,7 @@ class EventLiftSpec extends SparkSpec {
 
   private lazy val dir: String = {
     val d = Files.createTempDirectory("graft-lift").toString
-    Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "documents", "embeddings").foreach { t =>
+    Tables.Names.filterNot(_ == "events").foreach { t =>
       spark.read.parquet(s"$Sf/$t.parquet")
         .write.mode("overwrite").parquet(s"$d/$t.parquet")
     }

@@ -677,7 +677,7 @@ class PlanQualitySpec extends SparkSpec {
     assert(c.get("spark.sql.adaptive.enabled") == "true")
     assert(c.get("spark.sql.adaptive.coalescePartitions.enabled") == "true")
     val initial = c.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum").toInt
-    assert(initial === Engine.InitialPartitions)
+    assert(initial === 16 * spark.sparkContext.defaultParallelism)
     assert(initial > c.get("spark.sql.shuffle.partitions").toInt,
       "initial width must exceed the base width or AQE has nothing to coalesce")
     import org.apache.spark.sql.functions.col

@@ -37,16 +37,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // core conf, read once at SparkContext construction (see Engine.session)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Engine.tune(s)
+    val s = Engine.session("graft-test", cores = 4)
     s.sparkContext.setLogLevel("WARN")
     s
   }
