@@ -3,7 +3,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Engine.session("graft-bench")
-    spark.sparkContext.setLogLevel("WARN")
+    QueryRun.quietLogs(spark)
     // Warm on the MEASURED scale factor, not sf0.001 (see QueryRun.warm).
     QueryRun.warm(spark, sfDir)
     // optional args = query-name filter (dev profiling; the driver passes none)

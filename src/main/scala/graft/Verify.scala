@@ -8,21 +8,7 @@ object Verify {
     // extra args = run only these queries (dev loop; driver passes none)
     val only = args.drop(2).toSet
     val spark = Engine.session("graft-verify")
-    spark.sparkContext.setLogLevel("WARN")
-    // The localCheckpoint cleaner races the DAGScheduler's accumulator
-    // drain — DURING the dump loop, not just at shutdown (judge r13 log:
-    // "ERROR DAGScheduler: Failed to update accumulator" traces mid-run,
-    // exit 0, all queries pass). Those traces read like failures but
-    // aren't: a real query failure (exception or timeout) prints
-    // "[verify] <name> failed" below. Silence
-    // exactly the two racing classes for the whole run (scoped, NOT a
-    // global OFF — every other logger keeps WARN, so a genuine stop-time
-    // failure stays visible; the ADVICE-r13 scoping rule).
-    Seq("org.apache.spark.scheduler.DAGScheduler",
-        "org.apache.spark.ContextCleaner").foreach { cls =>
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        cls, org.apache.logging.log4j.Level.FATAL)
-    }
+    QueryRun.quietLogs(spark)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.keys
       .filter(name => only.isEmpty || only(name))
@@ -62,7 +48,7 @@ object Verify {
     // Every query's parquet dump and the oracle json are on disk at this
     // point — the run's verdict is fully decided. The known-benign
     // checkpoint-cleaner/DAGScheduler race is already scope-silenced
-    // above (mid-run AND shutdown); anything OTHER class that traces
+    // by QueryRun.quietLogs (mid-run AND shutdown); anything OTHER class that traces
     // during spark.stop() below is NOT pre-judged benign and stays
     // visible at WARN — deliberately no global log-off here (ADVICE r13).
     System.err.println("[verify] all query dumps complete; per-query " +

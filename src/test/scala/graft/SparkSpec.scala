@@ -20,7 +20,8 @@ trait SparkSpec extends AnyFunSuite {
   /** Run `body` with the small-scan input rebalance (Tables.balanced)
     * disabled — plan-shape assertions pin the OPERATOR plan, which is
     * exactly the rebalance-off plan a production-scale scan produces
-    * (the conditioner only fires when input bytes < parallelism × 4 MB).
+    * (the conditioner only fires when 256 KiB ≤ input bytes <
+    * parallelism × 4 MB, so sf0.001 scans never carry it).
     * ScanRebalanceSpec pins the conditioner itself.
     */
   def withoutScanRebalance[T](body: => T): T = {

@@ -1,7 +1,11 @@
 package graft
 
+import java.net.URI
 import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.FileTime
+
+import org.apache.hadoop.fs.{BlockLocation, FileStatus, FileSystem, LocatedFileStatus, Path, RawLocalFileSystem, RemoteIterator}
+import org.apache.hadoop.fs.permission.FsPermission
 
 import org.apache.spark.sql.types._
 import graft.sources.Tables
@@ -37,6 +41,34 @@ class TablesSpec extends SparkSpec {
     Files.write(f, "v2-longer".getBytes)
     Files.setLastModifiedTime(f, FileTime.fromMillis(1000000000000L))
     assert(Tables.dataKey(spark, dir.toString) !== before)
+  }
+
+  test("dataKey lists without permission, owner or block-location reads") {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val impl = "fs.graftnoperm.impl"
+    hconf.setClass(impl, classOf[TablesSpec.NoPermissionFs], classOf[FileSystem])
+    hconf.setBoolean(impl + ".disable.cache", true)
+    try {
+      val root = Files.createTempDirectory("graft-datakey-noperm")
+      val table = Files.createDirectories(root.resolve("t.parquet"))
+      val f = table.resolve("part-0.parquet")
+      Files.write(f, "v1".getBytes)
+      Files.write(root.resolve("u.parquet"), "u".getBytes)
+      Files.setLastModifiedTime(f, FileTime.fromMillis(1000000000000L))
+      val dir = "graftnoperm://" + root
+      val before = Tables.dataKey(spark, dir)
+      assert(!before.contains("absent"))
+      assert(Tables.dataKey(spark, dir) === before)
+      // a file one level down moves the key on mtime and on size
+      Files.setLastModifiedTime(f, FileTime.fromMillis(1000000000001L))
+      assert(Tables.dataKey(spark, dir) !== before)
+      Files.write(f, "v2-longer".getBytes)
+      Files.setLastModifiedTime(f, FileTime.fromMillis(1000000000000L))
+      assert(Tables.dataKey(spark, dir) !== before)
+    } finally {
+      hconf.unset(impl)
+      hconf.unset(impl + ".disable.cache")
+    }
   }
 
   test("dataKey on a missing dir does not throw (marks it absent)") {
@@ -144,5 +176,31 @@ class TablesSpec extends SparkSpec {
     } finally {
       spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     }
+  }
+}
+
+object TablesSpec {
+  /** The raw local filesystem under its own scheme, whose listing refuses
+    * every read a fingerprint does not need: a status throws on
+    * permission, owner and group (on the local FS each of those forks an
+    * `ls -ld`), and located listings and block locations throw.
+    */
+  class NoPermissionFs extends RawLocalFileSystem {
+    override def getUri: URI = URI.create("graftnoperm:///")
+    override def getScheme: String = "graftnoperm"
+    override def getFileStatus(p: Path): FileStatus = bare(super.getFileStatus(p))
+    override def listStatus(p: Path): Array[FileStatus] = super.listStatus(p).map(bare)
+    override def listLocatedStatus(p: Path): RemoteIterator[LocatedFileStatus] =
+      throw new UnsupportedOperationException("listLocatedStatus")
+    override def getFileBlockLocations(st: FileStatus, start: Long, len: Long): Array[BlockLocation] =
+      throw new UnsupportedOperationException("getFileBlockLocations")
+
+    private def bare(st: FileStatus): FileStatus =
+      new FileStatus(st.getLen, st.isDirectory, 1, st.getBlockSize,
+          st.getModificationTime, st.getPath) {
+        override def getPermission: FsPermission = throw new UnsupportedOperationException("getPermission")
+        override def getOwner: String = throw new UnsupportedOperationException("getOwner")
+        override def getGroup: String = throw new UnsupportedOperationException("getGroup")
+      }
   }
 }
