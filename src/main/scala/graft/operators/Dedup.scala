@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
-import graft.sources.StageMemo
+import graft.sources.{StageMemo, Tables}
 
 /** Deduplication operators for a large-scale text corpus: exact
   * (hash-groupBy), MinHash+LSH banding, SimHash, and n-gram Jaccard
@@ -705,9 +705,9 @@ object Dedup {
       val path =
         s"${indexStoreRoot(spark)}/${java.lang.Integer.toHexString(dir.hashCode)}"
       tokenHashes(base).write.mode("overwrite").parquet(s"$path/tok")
-      val tok = spark.read.parquet(s"$path/tok")
+      val tok = Tables.resolve(spark, s"$path/tok")
       lshBands(signaturesFromTok(tok)).write.mode("overwrite").parquet(s"$path/bands")
-      (tok, spark.read.parquet(s"$path/bands"))
+      (tok, Tables.resolve(spark, s"$path/bands"))
     }
 
   /** Increment-merge over the persisted index: all NEW verified pairs an
@@ -937,7 +937,7 @@ object Dedup {
       tokB.union(tokN).write.mode("overwrite").parquet(s"$path/tok")
       bandsB.union(lshBands(signaturesFromTok(tokN)))
         .write.mode("overwrite").parquet(s"$path/bands")
-      (spark.read.parquet(s"$path/tok"), spark.read.parquet(s"$path/bands"))
+      (Tables.resolve(spark, s"$path/tok"), Tables.resolve(spark, s"$path/bands"))
     }
 
   /** Takedown propagation through the persisted INDEX store — the third
@@ -967,7 +967,7 @@ object Dedup {
         .write.mode("overwrite").parquet(s"$path/tok")
       bandsB.join(delIds.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
         .write.mode("overwrite").parquet(s"$path/bands")
-      (spark.read.parquet(s"$path/tok"), spark.read.parquet(s"$path/bands"))
+      (Tables.resolve(spark, s"$path/tok"), Tables.resolve(spark, s"$path/bands"))
     }
 
   /** Takedown propagation through the persisted CLUSTER table — the

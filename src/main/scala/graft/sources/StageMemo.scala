@@ -84,6 +84,11 @@ object StageMemo {
     */
   def clear(owner: String): Unit = memo.removeKeys(_.startsWith(prefix(owner)))
 
+  /** Drop every owner's artifacts, so the next lookup of any key builds
+    * again: the start of a cold measurement.
+    */
+  def clearAll(): Unit = memo.clear()
+
   private[graft] def size(owner: String): Int =
     memo.countKeys(_.startsWith(prefix(owner)))
 

@@ -140,6 +140,19 @@ class StageMemoSpec extends SparkSpec {
     Dedup.clearMemos()
   }
 
+  test("registry: clearAll drops every owner's entries and the next lookup rebuilds") {
+    StageMemo.clear("specA"); StageMemo.clear("specB")
+    var builds = 0
+    def get(owner: String): Int = StageMemo.value[Int](owner, spark, NoDir, "k") { builds += 1; builds }
+    get("specA"); get("specB")
+    assert(builds === 2)
+    StageMemo.clearAll()
+    assert(StageMemo.size("specA") === 0 && StageMemo.size("specB") === 0)
+    assert(get("specA") === 3 && get("specB") === 4, "a lookup after clearAll must build")
+    assert(get("specA") === 3, "and hit afterwards")
+    StageMemo.clear("specA"); StageMemo.clear("specB")
+  }
+
   test("registry: the capacity bound holds across owners") {
     StageMemo.clear("specA"); StageMemo.clear("specB")
     val n = StageMemo.Capacity - 28

@@ -11,7 +11,8 @@ import org.apache.spark.sql.types._
 import graft.sources.Tables
 
 /** Pins for the scan-definition layer: the memo data-key (session + data
-  * fingerprint) and the recursive NTZ normalization.
+  * fingerprint), the job-free parquet resolver and the recursive NTZ
+  * normalization.
   */
 class TablesSpec extends SparkSpec {
   import spark.implicits._
@@ -128,6 +129,96 @@ class TablesSpec extends SparkSpec {
     assert(graft.operators.Similarity.kmeansFitMemo(e, dir, "spec", k = 2, iters = 1) eq cents)
     graft.operators.Similarity.clearMemos()
     assert(graft.operators.Similarity.memoSize === 0)
+  }
+
+  /** A Spark-written store: `parts` part files plus `_SUCCESS` and the
+    * `.crc` siblings the local filesystem adds.
+    */
+  private def writeStore(parts: Int): String = {
+    import org.apache.spark.sql.functions._
+    val path = Files.createTempDirectory("graft-resolve-store").toString + "/store"
+    spark.range(600).repartition(parts)
+      .select(col("id"), (col("id") % 7).cast("decimal(12,2)").as("amt"),
+        timestamp_micros(col("id") * 1000000L).as("ts"),
+        array(col("id"), col("id") + 1).as("arr"),
+        struct(col("id").cast("string").as("s"), lit(1.5).as("d")).as("st"))
+      .write.parquet(path)
+    path
+  }
+
+  private def assertSameAsSpark(path: String): Unit = {
+    val resolved = Tables.resolve(spark, path)
+    val inferred = spark.read.parquet(path)
+    assert(resolved.schema.json === inferred.schema.json, path)
+    assert(resolved.exceptAll(inferred).isEmpty && inferred.exceptAll(resolved).isEmpty, path)
+  }
+
+  /** Jobs that `body` starts on this thread, counted by a listener. A
+    * sentinel job in its own group, seen after `body`, proves that every
+    * earlier job start has been delivered.
+    */
+  private def jobsStartedBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "tables-spec-jobs"
+    val sentinel = group + "-sentinel"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!started.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(started.contains(sentinel), "the sentinel job start was never delivered")
+      started.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("resolve: schemas and rows equal spark.read.parquet on every testdata table") {
+    for (dir <- Seq(Sf, Sf.stripSuffix("sf0.001") + "sf0.01"); t <- Tables.Names) {
+      val path = s"$dir/$t.parquet"
+      assert(Tables.resolve(spark, path).schema.json === spark.read.parquet(path).schema.json, path)
+    }
+    assertSameAsSpark(s"$Sf/events.parquet")
+  }
+
+  test("resolve: a multi-part store with _SUCCESS and .crc siblings, and an empty-frame store") {
+    val store = writeStore(parts = 6)
+    val names = new java.io.File(store).list().toSeq
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")) &&
+      names.count(_.startsWith("part-")) === 6, names)
+    assertSameAsSpark(store)
+    val empty = Files.createTempDirectory("graft-resolve-empty").toString + "/store"
+    spark.read.parquet(store).limit(0).write.parquet(empty)
+    assertSameAsSpark(empty)
+    assert(Tables.resolve(spark, empty).count() === 0)
+  }
+
+  test("resolve: a cold table and a store read start no Spark job") {
+    val store = writeStore(parts = 3)
+    Tables.clearMemos()
+    assert(jobsStartedBy(Tables.lineitem(spark, Sf)) === 0)
+    assert(jobsStartedBy(Tables.resolve(spark, store)) === 0)
+    // the counter does see an inference job
+    assert(jobsStartedBy(spark.read.parquet(store)) >= 1)
+  }
+
+  test("resolve: a missing path and a dir holding only _SUCCESS fail as spark.read.parquet does") {
+    val root = Files.createTempDirectory("graft-resolve-errors")
+    val onlySuccess = Files.createDirectories(root.resolve("t.parquet"))
+    Files.write(onlySuccess.resolve("_SUCCESS"), Array.emptyByteArray)
+    Seq(root.resolve("absent").toString, onlySuccess.toString).foreach { path =>
+      val ours = intercept[Exception](Tables.resolve(spark, path))
+      val sparks = intercept[Exception](spark.read.parquet(path))
+      assert(ours.getClass === sparks.getClass, path)
+      assert(ours.getMessage === sparks.getMessage, path)
+    }
   }
 
   test("NTZ normalization recurses into struct, array, and map types") {
