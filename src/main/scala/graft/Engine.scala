@@ -52,8 +52,8 @@ object Engine {
     // initial width ∝ high constant, per-partition state stays bounded
     // through the probed range). parallelismFirst keeps small-partition
     // merging bounded at minPartitionSize. shuffle.partitions stays at
-    // the base width for the non-AQE paths (streaming state stores key
-    // their layout off it). Byte-based coalescing still folds
+    // the base width for the paths AQE does not re-plan (a streaming
+    // micro-batch runs with AQE off). Byte-based coalescing still folds
     // tiny-but-compute-bound shuffles to few tasks, so those paths keep
     // their explicitly NUMBERED repartitions, which AQE does not
     // coalesce (the q_er_recall lesson).

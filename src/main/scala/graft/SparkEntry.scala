@@ -1694,8 +1694,7 @@ object SparkEntry {
     // Outputs format timestamps as microsecond strings so the comparison
     // is representation-independent.
 
-    // Tumbling 1-hour windows: the batch shape of the streaming windowed
-    // agg (watermark + window in streaming/EventStream).
+    // Tumbling 1-hour windows.
     "q_ev_tumbling" -> { (s, dir) =>
       import s.implicits._
       Tables.events(s, dir)
@@ -1738,9 +1737,8 @@ object SparkEntry {
           $"first_purchase".isNotNull.as("converted"))
     },
 
-    // Per-user anomaly flags — the batch twin of the streaming
-    // StatefulOps.runningUserStats: flag events > 2σ from the user's
-    // mean. Variance is spelled EXPLICITLY ((Σx² − (Σx)²/n)/(n−1) over
+    // Per-user anomaly flags: events > 2σ from the user's mean.
+    // Variance is spelled EXPLICITLY ((Σx² − (Σx)²/n)/(n−1) over
     // exact DECIMAL sums cast to double) instead of stddev_samp — the
     // built-in's Welford order differs between engines in the last ulp,
     // the explicit form is bit-identical. One partial-agg shuffle for
@@ -2416,10 +2414,10 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"), sum($"k").as("sum_k"), max($"k").as("max_k"))
     },
 
-    // Interval join, batch shape of EventStream.clicksWithRecentPurchases:
-    // each click matched to the same user's purchases from the trailing
-    // hour. Bucketed trailing-window join — a pure equi-join on
-    // (user_id, hour-bucket), never a theta join (operators/RangeJoin).
+    // Interval join: each click matched to the same user's purchases
+    // from the trailing hour. Bucketed trailing-window join — a pure
+    // equi-join on (user_id, hour-bucket), never a theta join
+    // (operators/RangeJoin).
     "q_ev_interval" -> { (s, dir) =>
       import s.implicits._
       val ev = Tables.events(s, dir)

@@ -18,10 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * grouped count → per-doc map roll-up — TWO shuffles per featurize
   * pass. The feature vector is a pure per-row function of the token
   * array, so the fused expression removes both exchanges (the scan IS
-  * the feature table), keeps everything inside WholeStageCodegen, and —
-  * being stateless-narrow — is what makes the scoring operator
-  * stream-safe with zero state (the streaming twin applies frozen
-  * weights to this same expression).
+  * the feature table) and keeps everything inside WholeStageCodegen.
   *
   * Exactness: counts are exact longs; `(cnt/n)·scale` is one
   * correctly-rounded division followed by an EXACT power-of-two scale —

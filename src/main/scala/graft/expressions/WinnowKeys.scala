@@ -22,8 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * shuffle, but interpreted O(n·w) lambda evaluation — measured 10×
   * slower than the window at sf0.1). The native does O(n) work with a
   * monotonic deque AND stays a pure narrow map: no exploded stream, no
-  * per-doc sort, no shuffle before the first downstream aggregation —
-  * the shape both the batch winnow and the streaming twin want.
+  * per-doc sort, no shuffle before the first downstream aggregation.
   *
   * Selection rule, op-for-op the DuckDB oracle's
   * (`TextAnalysis.winnowSqlChain`): keys pack hash < 2^30 in the high

@@ -85,9 +85,7 @@ object Classifier {
     * [[graft.expressions.HashedTf]] — no explode, no (doc, bucket)
     * count shuffle, no per-doc roll-up (the composable two-shuffle
     * spelling is kept as ClassifierSpec's `featuresShuffled` reference
-    * and pinned bit-equal). Stateless-narrow is also what makes the
-    * scoring side stream-safe with zero state
-    * ([[graft.streaming.DocStream]]'s scoring twin).
+    * and pinned bit-equal).
     */
   def features(docs: DataFrame): DataFrame = {
     val nTok = size(col("toks")).cast("double")

@@ -247,26 +247,6 @@ object Curation {
       .agg(percentile(col("quality"), lit(minRank)).as("q_thresh"))
   }
 
-  /** The extreme-scale variant of [[qualityFilter]]: thresholds from
-    * `percentile_approx` (a fixed-size KLL-style sketch per language —
-    * O(accuracy) aggregation state regardless of distinct-quality count,
-    * where exact `percentile`'s partial buffer is a value→count map).
-    * Same two-pass shape; the kept set differs from the exact gate only
-    * where quality values sit within the sketch's rank-error band of the
-    * threshold (CurationSpec bounds the divergence). Not oracle-checked —
-    * the sketch is engine-specific — which is why the exact gate stays
-    * the default.
-    */
-  def qualityFilterApprox(docs: DataFrame, minRank: Double = 0.1,
-      accuracy: Int = 10000): DataFrame = {
-    val q = qualityScores(docs)
-    val thresholds = q.groupBy(col("lang"))
-      .agg(percentile_approx(col("quality"), lit(minRank), lit(accuracy)).as("q_thresh"))
-    q.join(broadcast(thresholds), Seq("lang"))
-      .filter(col("quality") >= col("q_thresh"))
-      .select(col("doc_id"), col("lang"), col("quality"), col("q_thresh"))
-  }
-
   /** Deterministic uniform k-sample per group (bottom-k by content hash —
     * the KMV/bottom-k sketch trick): the k smallest hashes are a uniform
     * sample of the group, reproducible across reruns and cluster sizes,

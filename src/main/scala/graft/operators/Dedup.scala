@@ -34,7 +34,7 @@ import graft.sources.{StageMemo, Tables}
 object Dedup {
 
   /** This family's namespace in the [[StageMemo]] artifact registry. */
-  private val Owner = "Dedup"
+  private[graft] val Owner = "Dedup"
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
@@ -136,29 +136,6 @@ object Dedup {
     }
     sig.select(col("doc_id"), explode(array(bands: _*)).as("x"))
       .select(col("doc_id"), col("x.band").as("band"), col("x.bh").as("bh"))
-  }
-
-  /** Per-ROW LSH band keys — the streaming-safe formulation of
-    * [[minhashSignatures]]→[[lshBands]]: the whole signature is computed
-    * inside one narrow projection (16 `array_min(transform(hs, perm))`
-    * folds over the fused shingle array), no aggregation, so it runs on
-    * an unbounded stream exactly as written. Identical to the batch path
-    * by construction: min over the NON-distinct shingle array equals min
-    * over the distinct token set (duplicates can't change a min), and the
-    * band combine mirrors [[lshBands]] op-for-op (pinned equivalent in
-    * DedupSpec). Docs too short to shingle yield null `bh` — callers
-    * filter those.
-    */
-  def bandKeysNarrow(text: Column): Column = {
-    val hs = graft.expressions.ShingleHashes.shingle_hashes(text)
-    val ms = (0 until NumHashes).map(i =>
-      array_min(transform(hs, h => minhashPerm(i, h))))
-    val bands = (0 until NumHashes / BandSize).map { b =>
-      val bh = (0 until BandSize).map(i => ms(b * BandSize + i))
-        .reduce((acc, m) => (acc * lit(31L) + m) % lit(P))
-      struct(lit(b.toLong).as("band"), bh.as("bh"))
-    }
-    array(bands: _*)
   }
 
   /** LSH bucket-health audit: per band, the distribution of bucket sizes —
@@ -1320,8 +1297,6 @@ object Dedup {
     * regenerate corpora.
     */
   def clearMemos(): Unit = StageMemo.clear(Owner)
-
-  private[graft] def memoSize: Int = StageMemo.size(Owner)
 
   def duplicateClusters(pairs: DataFrame): DataFrame = {
     var edges = pairs

@@ -3,32 +3,11 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Write-side table maintenance for large parquet datasets.
-  *
-  * At 100 TB the write layout IS the query plan: thousands of tiny files
-  * destroy scan scheduling, and unclustered files defeat min/max row-group
-  * pruning. [[compactRangeSorted]] rewrites a dataset into bounded-size
-  * files that are RANGE-clustered on a sort key — each output file covers
-  * a disjoint key range, so a point/range filter on that key prunes whole
-  * files via parquet footer statistics.
+/** Layout planning for large parquet datasets: the Z-order key
+  * ([[zValue]], clustering on several dimensions at once) and the
+  * rendezvous reshard audit ([[reshardAudit]]).
   */
 object Maintenance {
-
-  /** Rewrite `df` range-partitioned and sorted by `sortCols`, with at most
-    * `maxRecordsPerFile` rows per file.
-    *
-    * repartitionByRange gives disjoint, ordered key ranges per partition
-    * (one exchange with range sampling); sortWithinPartitions makes each
-    * file internally ordered → parquet writes tight min/max stats.
-    */
-  def compactRangeSorted(df: DataFrame, path: String, numFiles: Int,
-      maxRecordsPerFile: Long, sortCols: String*): Unit =
-    df.repartitionByRange(numFiles, sortCols.map(df.col): _*)
-      .sortWithinPartitions(sortCols.map(df.col): _*)
-      .write
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .mode("overwrite")
-      .parquet(path)
 
   /** Morton (Z-order) code: interleave the low `bits` bits of each input
     * column — output bit `i·n + j` is bit `i` of column `j`. Inputs must
@@ -58,28 +37,6 @@ object Maintenance {
       i <- 0 until bits
       (c, j) <- cols.zipWithIndex
     } yield s"((($c >> $i) & 1) << ${i * n + j})").mkString(" | ")
-  }
-
-  /** Rewrite `df` clustered on the Z-order of `dims` (each pre-bucketed
-    * to [0, 2^bits) via modulo here; swap in range-rank bucketing for
-    * skewed dimensions): range-partition + sort on the interleaved code,
-    * so every output file covers a small HYPER-RECTANGLE of the dimension
-    * space and a filter on ANY subset of the dimensions prunes files via
-    * parquet min/max footer stats. Linear sort gives pruning on the
-    * leading column only — the difference is decisive for 100-TB tables
-    * queried along multiple axes (MaintenanceSpec measures it).
-    */
-  def compactZOrdered(df: DataFrame, path: String, numFiles: Int,
-      maxRecordsPerFile: Long, bits: Int, dims: String*): Unit = {
-    val z = zValue(bits, dims.map(d => pmod(df.col(d), lit(1 << bits)).cast("long")): _*)
-    df.withColumn("_z", z)
-      .repartitionByRange(numFiles, col("_z"))
-      .sortWithinPartitions(col("_z"))
-      .drop("_z")
-      .write
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .mode("overwrite")
-      .parquet(path)
   }
 
   /** Rendezvous (highest-random-weight) reshard audit — the question a

@@ -45,8 +45,7 @@ object RangeJoin {
 
   /** Time-interval join: each left row matched to right rows sharing `keys`
     * with `rightTs` in the inclusive window [`leftTs` - lookback, `leftTs`]
-    * — the batch shape of a stream-stream interval join (e.g.
-    * [[graft.streaming.EventStream.clicksWithRecentPurchases]]).
+    * — the batch shape of a stream-stream interval join.
     *
     * Same bucketing trick as [[bucketedRangeJoin]], specialized to a
     * trailing window: bucket width = the lookback itself, so each left row

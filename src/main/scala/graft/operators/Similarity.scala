@@ -29,7 +29,7 @@ import graft.sources.StageMemo
 object Similarity {
 
   /** This family's namespace in the [[StageMemo]] artifact registry. */
-  private val Owner = "Similarity"
+  private[graft] val Owner = "Similarity"
 
   val NumPlanes = 8
 
@@ -2802,8 +2802,6 @@ object Similarity {
     * memo lifecycle.
     */
   def clearMemos(): Unit = { StageMemo.clear(Owner); probeCountMemo.clear() }
-
-  private[graft] def memoSize: Int = StageMemo.size(Owner)
 
   /** Semantic topic profile — the cross-modal "what lives in each
     * embedding cluster" audit a curation run reads before reweighting:

@@ -783,65 +783,6 @@ object TextAnalysis {
       .select(col("doc_id")).distinct()
   }
 
-  /** The broadcast-scale variant of [[contaminated]]: the eval set's
-    * shingle hashes are folded into a fixed-size Bloom filter (Spark's
-    * own `BloomFilterAggregate`, the sketch behind runtime filter
-    * injection), carried as a scalar subquery — the same
-    * `might_contain(ScalarSubquery(agg), h)` shape `InjectRuntimeFilter`
-    * builds; flagging the training corpus is then a pure NARROW
-    * map-and-filter per shingle — with no shuffle of the train
-    * shingle stream at all. The exact semi-join shuffles |train shingles|
-    * (~30× corpus rows) on h; at 100 TB that is the dominant cost, while
-    * a benchmark suite's shingle set fits a few-MB filter.
-    *
-    * Semantics: a STRICT SUPERSET of [[contaminated]] — Bloom filters
-    * have no false negatives, so nothing contaminated ever slips through;
-    * false positives over-flag at the filter's error rate (~1% at the
-    * default sizing; spec-bounded). The right gate direction for
-    * decontamination, where a missed leak costs more than an over-drop.
-    * Not oracle-checked (the sketch's bit layout is engine-specific) —
-    * the exact [[contaminated]] stays the default; this is the documented
-    * swap when the corpus outgrows the semi-join.
-    */
-  def contaminatedBloom(train: DataFrame, evalSet: DataFrame,
-      expectedItems: Long = 1L << 22): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.graft.bridge
-    val evalShingles = Dedup.shingles(evalSet).select(col("h")).distinct()
-    val bloom = evalShingles.agg(
-      bridge.column(new BloomFilterAggregate(
-          bridge.expression(col("h")), Literal(expectedItems))
-        .toAggregateExpression()).as("bf"))
-    val mightContain = bridge.column(
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        bridge.scalarSubquery(bloom), bridge.expression(col("h"))))
-    Dedup.shingles(train)
-      .filter(mightContain)
-      .select(col("doc_id")).distinct()
-  }
-
-  /** Train-offline half of the STREAMING decontamination gate: fold the
-    * eval split's distinct shingle hashes into Spark's Bloom sketch and
-    * return its serialized bytes — a bounded artifact (a few MB at any
-    * corpus size: the filter is sized by the EVAL set, which is a
-    * benchmark suite, not a crawl) collected once and shipped to the
-    * stream as a literal, exactly as [[Classifier.fit]]'s weight vector
-    * ships to [[graft.streaming.DocStream.scoreDocs]]. The documented
-    * bounded-collect exception (gradient/centroid-row discipline).
-    */
-  def evalBloomBytes(evalSet: DataFrame, expectedItems: Long = 1L << 22): Array[Byte] = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.graft.bridge
-    val evalShingles = Dedup.shingles(evalSet).select(col("h")).distinct()
-    evalShingles.agg(
-      bridge.column(new BloomFilterAggregate(
-          bridge.expression(col("h")), Literal(expectedItems))
-        .toAggregateExpression()).as("bf"))
-      .collect().head.getAs[Array[Byte]](0)
-  }
-
   /** Per-doc contamination REPORT — the graded companion to the binary
     * [[contaminated]] flag: for each training doc, the fraction of its
     * DISTINCT word-trigram shingles that also occur in the held-out eval
@@ -941,8 +882,7 @@ object TextAnalysis {
     * spelling, kept as [[winnowWindowed]], did O(n) work per doc but
     * shuffled the whole corpus shingle stream to sort it per doc — at
     * corpus scale that exchange dominates the narrow form's O(n·w)
-    * lambda work; the streaming twin needs the narrow form anyway, and
-    * one selection implementation serves both.)
+    * lambda work.)
     */
   def winnow(docs: DataFrame, w: Int = 4): DataFrame = {
     val P: Long = 2147483648L // 2^31
@@ -984,10 +924,9 @@ object TextAnalysis {
   /** Per-ROW winnow SELECTION: the distinct packed (hash, ~pos) winner
     * keys of every valid window, computed inside one narrow projection
     * (no explode, no per-doc window sort — the corpus-scale exchange the
-    * windowed form pays is gone entirely; this is what makes both the
-    * batch [[winnow]] and the streaming twin shuffle-free before their
-    * first aggregation). The native fused
-    * [[graft.expressions.WinnowKeys]] — O(n) monotonic-deque sliding
+    * windowed form pays is gone entirely; this is what makes
+    * [[winnow]] shuffle-free before its first aggregation). The native
+    * fused [[graft.expressions.WinnowKeys]] — O(n) monotonic-deque sliding
     * min, codegen'd — replaces the nested-HOF spelling, which is kept
     * below as [[winnowKeysHof]] (interpreted O(n·w) — measured 10×
     * slower at sf0.1; the native matches the windowed form's wall-clock
@@ -1013,27 +952,6 @@ object TextAnalysis {
       .otherwise(array().cast("array<int>"))
     array_distinct(transform(starts, s => array_min(slice(keys, s + 1, lit(w)))))
   }
-
-  /** Per-ROW winnow fingerprint hashes — the streaming-safe formulation
-    * of [[winnow]]'s distinct-hash set (the `fp` input of
-    * [[graft.operators.Dedup.winnowPairs]]): the whole windowed-min
-    * selection runs inside one narrow projection over the fused shingle
-    * array (no per-doc window, no aggregation), so it evaluates on an
-    * unbounded stream exactly as written — the same role
-    * [[graft.operators.Dedup.bandKeysNarrow]] plays for the MinHash
-    * bands. Identical to the batch path by construction: same packed
-    * (hash, ~pos) keys, same full-window starts (`pos ≤ n−w`), same
-    * short-doc rule (one truncated window when n < w), then
-    * `array_distinct` over the winning hashes (position-free — hash
-    * agreement is the candidate signal). Docs too short to shingle
-    * yield an empty array. Equality with `winnow().groupBy(doc_id)`
-    * is pinned in WinnowSpec.
-    *
-    * Cost note: O(n·w) lambda work per doc versus the batch window's
-    * O(n) — the per-row price of streaming-safety; w = 4.
-    */
-  def winnowFingerprintsNarrow(text: Column, w: Int = 4): Column =
-    array_distinct(transform(winnowKeysNarrow(text, w), k => shiftright(k, 31)))
 
   /** Bigram-surprisal quality score — the self-trained language-model
     * proxy of the CCNet perplexity filter: the corpus's own bigram and
@@ -2018,14 +1936,13 @@ object TextAnalysis {
        |FROM zoct a JOIN zoct b ON b.octave >= a.octave
        |GROUP BY a.octave, a.n_types, a.token_mass""".stripMargin
 
-  /** Count–min sketch geometry (Cormode–Muthukrishnan '05): [[CmsD]]
-    * independent hash rows of [[CmsW]] buckets each. The row hashes are
-    * affine mixes of the shared polynomial token hash — h_i(w) =
-    * ((poly(w)·a_i + b_i) mod P) mod W — fully deterministic integer
+  /** Count–min sketch geometry (Cormode–Muthukrishnan '05): D =
+    * `CmsA.size` independent hash rows of [[CmsW]] buckets each. The
+    * row hashes are affine mixes of the shared polynomial token hash —
+    * h_i(w) = ((poly(w)·a_i + b_i) mod P) mod W — fully deterministic integer
     * arithmetic so the DuckDB mirror rebuilds the identical sketch.
     * (a_i·poly < ~10^13, well inside Long.)
     */
-  val CmsD = 4
   val CmsW = 512
   val CmsA: Seq[Long] = Seq(31L, 131L, 1031L, 10007L)
   val CmsB: Seq[Long] = Seq(7L, 17L, 29L, 43L)
@@ -2040,28 +1957,19 @@ object TextAnalysis {
     * for a 100 TB corpus — per-shard sketches roll up to one 2048-cell
     * table with no token re-scan.
     */
-  def cmsSketch(docs: DataFrame): DataFrame =
-    cmsCellsOf(withToks(docs).select(explode(col("toks")).as("w")))
-      .groupBy(col("row_i"), col("bucket"))
-      .agg(count(lit(1)).as("cnt"))
-
-  /** One (row_i, bucket) cell hit per (token occurrence × sketch row) —
-    * the update fan-out shared by the batch sketch and the streaming
-    * twin ([[graft.streaming.DocStream.cmsCells]]). Input: a frame with
-    * a string column `w` (may be a streaming frame — everything here is
-    * a narrow map plus a broadcast of the D-row constant table).
-    */
-  def cmsCellsOf(tokDf: DataFrame): DataFrame = {
-    val spark = tokDf.sparkSession
+  def cmsSketch(docs: DataFrame): DataFrame = {
+    val spark = docs.sparkSession
     import spark.implicits._
     val rows = CmsA.zip(CmsB).zipWithIndex
       .map { case ((a, b), i) => (i, a, b) }.toDF("row_i", "a", "b")
-    tokDf
+    withToks(docs).select(explode(col("toks")).as("w"))
       .withColumn("h", stringHash(col("w")))
       .crossJoin(broadcast(rows))
       .withColumn("bucket",
         pmod(col("h") * col("a") + col("b"), lit(P)) % lit(CmsW.toLong))
       .select(col("row_i"), col("bucket"))
+      .groupBy(col("row_i"), col("bucket"))
+      .agg(count(lit(1)).as("cnt"))
   }
 
   /** CMS point-query audit: estimate vs exact count for the top-`probeK`
@@ -2171,19 +2079,10 @@ object TextAnalysis {
   def hllRegisters(docs: DataFrame): DataFrame =
     hllRegistersOf(withToks(docs).select(col("source"), explode(col("toks")).as("w")))
 
-  /** Register cells over an arbitrary (source, w) stream — shared by
-    * the batch sketch and the streaming twin
-    * ([[graft.streaming.DocStream.hllUpdates]]).
+  /** Register cells over an arbitrary (source, w) frame: one
+    * (source, bucket, rho) hit per token occurrence, max per cell.
     */
   def hllRegistersOf(tokDf: DataFrame): DataFrame =
-    hllCellsOf(tokDf)
-      .groupBy(col("source"), col("bucket"))
-      .agg(max(col("rho")).as("rho"))
-
-  /** One (source, bucket, rho) cell hit per token occurrence — the
-    * narrow update fan-in both register builders ride.
-    */
-  def hllCellsOf(tokDf: DataFrame): DataFrame =
     tokDf
       .withColumn("h", stringHash(col("w")))
       .withColumn("h2", pmod(col("h") * col("h"), lit(P)))
@@ -2193,6 +2092,8 @@ object TextAnalysis {
       .select(col("source"), col("bucket"),
         when(col("v") === 0L, lit(31L))
           .otherwise(lit(31L) - length(bin(col("v"))).cast("long")).as("rho"))
+      .groupBy(col("source"), col("bucket"))
+      .agg(max(col("rho")).as("rho"))
 
   /** Merge two register tables WITHOUT re-scanning either corpus — the
     * mergeability law (same contract as [[kmvMerge]] and the CMS
@@ -2446,14 +2347,9 @@ object TextAnalysis {
     * shuffles both corpora on h, this ships 4 bytes per eval shingle
     * and streams the 100 TB side. The exact side here is the AUDIT
     * (sf-bounded); production composes bloom-gate → exact recheck on
-    * the ≤ (true + FPR·n) survivors.
-    *
-    * Relation to [[contaminatedBloom]]: that op is the production fast
-    * path on Spark's native codegen'd bloom_filter_agg/might_contain
-    * (engine-specific bit layout, so spec-only); this one rebuilds the
-    * filter from named affine mixes so the DuckDB oracle sets the
-    * IDENTICAL bits — the cross-engine FPR audit the native sketch
-    * can't give.
+    * the ≤ (true + FPR·n) survivors. The filter is built from named
+    * affine mixes, not Spark's bloom_filter_agg, so the DuckDB oracle
+    * sets the IDENTICAL bits.
     */
   def bloomDecontam(train: DataFrame, eval: DataFrame): DataFrame = {
     val spark = train.sparkSession
@@ -2578,9 +2474,8 @@ object TextAnalysis {
   /** The bottom-k sketch itself over a distinct (source, h) stream —
     * the bounded-heap k-min per source (value = −h so "k largest by
     * value" is "k smallest h"; h < 2^30 is exact in double, and the
-    * upstream distinct means ids never tie). Shared by [[kmvOverlap]]
-    * and the streaming twin's parity spec
-    * ([[graft.streaming.DocStream.kmvCandidates]]).
+    * upstream distinct means ids never tie). Every KMV op builds its
+    * sketch here.
     */
   def kmvSketchOf(sh: DataFrame, k: Int = KmvK): DataFrame =
     sh.groupBy(col("source"))

@@ -198,34 +198,28 @@ object Unigram {
     * the same DP order), so scores — and the chosen segmentation — are
     * bit-identical across engines.
     */
-  private def viterbiExpr(maxLen: Int): String = viterbiExprFor("word", maxLen)
-
-  /** [[viterbiExpr]] over an arbitrary word-expression reference (a
-    * column name or an enclosing lambda variable) — lets the streaming
-    * serving twin run the SAME DP per token inside a `transform` lambda.
-    */
-  private[graft] def viterbiExprFor(word: String, maxLen: Int): String =
+  private def viterbiExpr(maxLen: Int): String =
     s"""aggregate(
-       |  sequence(1, length($word)),
+       |  sequence(1, length(word)),
        |  array(named_struct('p', CAST(1.0 AS DOUBLE), 'n', 0, 'seg', '')),
        |  (acc, j) -> array_append(acc,
        |    aggregate(
        |      sequence(CASE WHEN j > $maxLen THEN j - $maxLen ELSE 0 END, j - 1),
        |      named_struct('p', CAST(-1.0 AS DOUBLE), 'n', 0, 'seg', ''),
        |      (b, i) -> CASE
-       |        WHEN try_element_at(vm, substring($word, i + 1, j - i)) IS NOT NULL
+       |        WHEN try_element_at(vm, substring(word, i + 1, j - i)) IS NOT NULL
        |         AND element_at(acc, i + 1).p >= CAST(0 AS DOUBLE)
-       |         AND (element_at(acc, i + 1).p * try_element_at(vm, substring($word, i + 1, j - i)) > b.p
-       |           OR (element_at(acc, i + 1).p * try_element_at(vm, substring($word, i + 1, j - i)) = b.p
+       |         AND (element_at(acc, i + 1).p * try_element_at(vm, substring(word, i + 1, j - i)) > b.p
+       |           OR (element_at(acc, i + 1).p * try_element_at(vm, substring(word, i + 1, j - i)) = b.p
        |               AND element_at(acc, i + 1).n + 1 <= b.n))
        |        THEN named_struct(
-       |          'p', element_at(acc, i + 1).p * try_element_at(vm, substring($word, i + 1, j - i)),
+       |          'p', element_at(acc, i + 1).p * try_element_at(vm, substring(word, i + 1, j - i)),
        |          'n', element_at(acc, i + 1).n + 1,
        |          'seg', CASE WHEN element_at(acc, i + 1).seg = ''
-       |                 THEN substring($word, i + 1, j - i)
-       |                 ELSE concat(element_at(acc, i + 1).seg, ' ', substring($word, i + 1, j - i)) END)
+       |                 THEN substring(word, i + 1, j - i)
+       |                 ELSE concat(element_at(acc, i + 1).seg, ' ', substring(word, i + 1, j - i)) END)
        |        ELSE b END)),
-       |  acc -> element_at(acc, length($word) + 1).seg)""".stripMargin
+       |  acc -> element_at(acc, length(word) + 1).seg)""".stripMargin
 
   // ---- Lattice-EM (soft) round — the Kudo'18 trainer proper --------------
 
@@ -394,22 +388,6 @@ object Unigram {
        |              * 1e9 / element_at(al, length(word) + 1)) AS BIGINT))
        |      ELSE NULL END))),
        |  x -> x IS NOT NULL) ELSE NULL END""".stripMargin
-
-  /** The trained vocabulary as a driver-side probability map — the
-    * frozen serving artifact the streaming twin rides as a map LITERAL
-    * (the langOfDocs posture: artifact as literals, zero joins, zero
-    * state). Bounded collect: ≤ vocabV + |chars| rows by construction
-    * (the topLangs/bloom-bytes bounded-artifact class). p = cnt/total in
-    * one IEEE division — identical to the batch [[segment]] column math.
-    */
-  def vocabMapOf(docs: DataFrame, seedV: Int = SeedV, vocabV: Int = VocabV,
-      maxLen: Int = MaxLen, emRounds: Int = EmRounds,
-      maxWords: Int = MaxWords): Map[String, Double] = {
-    val rows = unigramVocab(docs, seedV, vocabV, maxLen, emRounds, maxWords)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val total = rows.map(_._2).sum
-    rows.map { case (p, c) => p -> c.toDouble / total.toDouble }.toMap
-  }
 
   /** Memoized trained-tokenizer artifact (word → piece count under the
     * FINAL vocabulary) per (session, dir) — the [[TextAnalysis.bpeDictFor]]

@@ -13,16 +13,6 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** The dataframe's result as a lazy scalar-subquery expression — the
-    * shape `BloomFilterMightContain` and friends require for their
-    * constant side (Spark's own runtime-filter injection builds the same
-    * `ScalarSubquery(aggregate)` wrapper). Stays fully lazy: the subplan
-    * executes inside the consuming query, not at construction.
-    */
-  def scalarSubquery(df: org.apache.spark.sql.DataFrame): Expression =
-    org.apache.spark.sql.catalyst.expressions.ScalarSubquery(
-      df.queryExecution.analyzed)
 }
 
 /** Declares `(array<double>, array<double>)` input types with implicit

@@ -81,34 +81,6 @@ class CurationSpec extends SparkSpec {
     }
   }
 
-  test("domainCounters streaming twin: latest per-source counters equal the batch stage") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.DocStream
-    implicit val ctx = spark.sqlContext
-    val rows = docs.select($"doc_id", $"text", $"source")
-      .as[(Long, String, String)].collect()
-    val (b1, b2) = rows.splitAt(rows.length / 2)
-    val ms = MemoryStream[(Long, String, String)]
-    val q = DocStream.domainCounters(ms.toDS().toDF("doc_id", "text", "source"))
-      .writeStream.format("memory").queryName("domcnt").outputMode("update").start()
-    ms.addData(b1.toSeq); q.processAllAvailable()
-    ms.addData(b2.toSeq); q.processAllAvailable()
-    q.stop()
-    // Update mode: the LATEST emission per source is the counter table
-    val got = spark.table("domcnt").collect()
-      .zipWithIndex
-      .groupBy(_._1.getString(0))
-      .map { case (s, rs) =>
-        val last = rs.maxBy(_._2)._1
-        s -> ((last.getLong(1), last.getLong(2)))
-      }
-    val expect = TextAnalysis.gopherRules(docs, passthrough = Seq("source"))
-      .groupBy($"source")
-      .agg(count(lit(1)).as("n"), sum(when($"pass", 1L).otherwise(0L)).as("p"))
-      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(got === expect, "stream counters must equal the batch stage")
-  }
-
   test("leakSafeSplit: no duplicate cluster straddles a split; singletons match assignSplit") {
     import graft.operators.Dedup
     val c = Dedup.corpus(docs)
@@ -202,27 +174,6 @@ class CurationSpec extends SparkSpec {
     val ids = p.groupBy($"lang").agg(max($"pack_id").as("mx"), count_distinct($"pack_id").as("n"))
       .filter($"n" =!= $"mx" + 1)
     assert(ids.count() === 0)
-  }
-
-  test("approx quality gate tracks the exact gate within the sketch error band") {
-    val exact = Curation.qualityFilter(docs).select($"doc_id").as[Long].collect().toSet
-    val approx = Curation.qualityFilterApprox(docs).select($"doc_id").as[Long].collect().toSet
-    // the sketch may shift the threshold by its rank error; the symmetric
-    // difference must stay a small fraction of the corpus
-    val diff = (exact -- approx) ++ (approx -- exact)
-    assert(diff.size <= (exact.size * 0.02).ceil.toInt,
-      s"approx gate diverged on ${diff.size} of ${exact.size} docs")
-  }
-
-  test("approx quality gate holds the error band at bench scale (sf0.1)") {
-    // the scale the documented percentile→percentile_approx swap targets:
-    // 100× the suite SF, where the sketch actually summarizes
-    val big = Tables.documents(spark, "/root/testdata/sf0.1")
-    val exact = Curation.qualityFilter(big).select($"doc_id").as[Long].collect().toSet
-    val approx = Curation.qualityFilterApprox(big).select($"doc_id").as[Long].collect().toSet
-    val diff = (exact -- approx) ++ (approx -- exact)
-    assert(diff.size <= (exact.size * 0.02).ceil.toInt,
-      s"approx gate diverged on ${diff.size} of ${exact.size} docs at sf0.1")
   }
 
   test("packing: hierarchical scan (small blocks) equals the flat cumsum") {
@@ -535,25 +486,6 @@ class CurationSpec extends SparkSpec {
     val graded = graft.operators.TextAnalysis.contaminationFraction(tr, ev)
       .filter($"n_hit" > 0).select($"doc_id").as[Long].collect().toSet
     assert(graded === binary)
-  }
-
-  test("bloom decontamination: superset of exact, bounded over-flagging (sf0.001 + sf0.1)") {
-    for (sf <- Seq(Sf, "/root/testdata/sf0.1")) {
-      val d = Tables.documents(spark, sf)
-      val train = d.filter($"doc_id" % 50 =!= 0)
-      val eval_ = d.filter($"doc_id" % 50 === 0)
-      val exact = graft.operators.TextAnalysis.contaminated(train, eval_)
-        .as[Long].collect().toSet
-      val bloom = graft.operators.TextAnalysis.contaminatedBloom(train, eval_)
-        .as[Long].collect().toSet
-      // no false negatives, ever — the property decontamination needs
-      assert(exact.subsetOf(bloom), s"$sf: bloom missed ${(exact -- bloom).size} contaminated docs")
-      // false positives bounded: a doc over-flags only if one of its ~30
-      // shingles collides, so give the per-item ~1% rate generous headroom
-      val nTrain = train.count()
-      assert((bloom -- exact).size <= math.max(5, nTrain / 10),
-        s"$sf: bloom over-flagged ${(bloom -- exact).size} of $nTrain docs")
-    }
   }
 
   test("token counting: BPE-ish pretokens split punctuation/digit runs off words") {

@@ -151,17 +151,6 @@ class DedupSpec extends SparkSpec {
     rep.unpersist()
   }
 
-  test("bandKeysNarrow: per-row band keys == batch signature->bands on the whole corpus") {
-    val batch = Dedup.lshBands(Dedup.minhashSignatures(corpus))
-      .select($"doc_id", $"band", $"bh")
-    val narrow = corpus
-      .select($"doc_id", explode(Dedup.bandKeysNarrow($"text")).as("k"))
-      .filter($"k.bh".isNotNull)
-      .select($"doc_id", $"k.band".as("band"), $"k.bh".as("bh"))
-    assert(batch.exceptAll(narrow).isEmpty && narrow.exceptAll(batch).isEmpty,
-      "streaming-safe narrow formulation must equal the batch aggregation")
-  }
-
   test("edit-distance verify: exact copies at 0, near copies at the appended tail length") {
     val ed = Dedup.editDistancePairs(corpus)
       .select($"doc_a", $"doc_b", $"edit_dist").as[(Long, Long, Long)]

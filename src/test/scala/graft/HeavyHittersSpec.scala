@@ -66,62 +66,6 @@ class HeavyHittersSpec extends SparkSpec {
     a.foreach { case (_, cnt, n, pm) => assert(pm === cnt * 1000 / n) }
   }
 
-  test("streaming MG candidates: per-class superset of exact heavies; state persists across batches") {
-    import java.sql.Timestamp
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val ctx = spark.sqlContext
-    // transformWithState requires the RocksDB state store (state-v2)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-    val docs = graft.sources.Tables.documents(spark, Sf)
-      .select($"doc_id", $"text").as[(Long, String)].collect().toSeq
-    val ms = MemoryStream[graft.streaming.DocStream.StreamDoc]
-    val q = graft.streaming.DocStream.heavyCandidates(spark, ms.toDS(), k = 32)
-      .writeStream.format("memory").queryName("hh_stream").outputMode("append").start()
-    ms.addData(docs.map { case (id, t) =>
-      graft.streaming.DocStream.StreamDoc(new Timestamp(0L), id, t) })
-    q.processAllAvailable()
-
-    // batch reference: per-class exact counts over the same corpus
-    val perClass = docs.flatMap { case (_, t) =>
-      t.trim.toLowerCase.split("[ \t\n\f\r]+").filter(_.nonEmpty) }
-      .groupBy(w => {
-        var h = 7L; var i = 0
-        while (i < w.length) { val cp = w.codePointAt(i); h = (h * 31 + cp) % 1000000007L; i += Character.charCount(cp) }
-        h % 32
-      })
-    val survivors = spark.table("hh_stream")
-      .select($"cls", $"w").as[(Long, String)].collect().toSet
-    perClass.foreach { case (cls, ws) =>
-      val n = ws.size
-      val heavies = ws.groupBy(w => w).collect {
-        case (w, occ) if occ.size.toLong * 32 >= n => w
-      }
-      heavies.foreach(w => assert(survivors.contains((cls, w)),
-        s"guaranteed heavy '$w' missing from class $cls candidates"))
-    }
-    assert(survivors.nonEmpty)
-
-    // state persists: a second-batch flood must surface its word
-    ms.addData(Seq(graft.streaming.DocStream.StreamDoc(new Timestamp(1L), 999999L,
-      Seq.fill(500)("graftfloodword").mkString(" "))))
-    q.processAllAvailable()
-    q.stop()
-    val after = spark.table("hh_stream")
-      .filter($"w" === "graftfloodword").as[(Long, String, Long)].collect()
-    assert(after.nonEmpty, "flooded word must survive its class's sketch")
-    assert(after.head._3 >= 400L, s"stored count must lower-bound the flood: ${after.head}")
-    } finally {
-      old match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
   test("empty corpus yields no rows") {
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
     assert(TextAnalysis.heavyHitters(empty).count() === 0)

@@ -1,17 +1,15 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.TextAnalysis
-import graft.streaming.DocStream
 
 /** HyperLogLog registers and estimator: the merge/replay laws that make
   * the sketch the right 100-TB cardinality summary (cell-wise max folds
   * shards and tolerates at-least-once redelivery), the small-range
   * linear-counting branch against exact truth on the real corpus, the
-  * raw branch's error bound on a synthetic large-cardinality stream,
-  * and the streaming twin's batch parity.
+  * and the raw branch's error bound on a synthetic large-cardinality
+  * stream.
   */
 class HllSpec extends SparkSpec {
   import spark.implicits._
@@ -97,47 +95,5 @@ class HllSpec extends SparkSpec {
     val merged = regSet(TextAnalysis.hllMerge(
       TextAnalysis.hllRegisters(base), TextAnalysis.hllRegisters(incr)))
     assert(merged === direct)
-  }
-
-  test("streaming twin: emitted registers match the batch sketch after every prefix") {
-    implicit val ctx = spark.sqlContext
-    // transformWithState requires the RocksDB state store (state-v2)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-    val docs = graft.sources.Tables.documents(spark, Sf)
-      .select($"source", $"text").as[(String, String)].collect().toSeq
-    val ms = MemoryStream[(String, String)]
-    val q = DocStream.hllUpdates(spark, ms.toDS())
-      .writeStream.format("memory").queryName("hll_stream")
-      .outputMode("append").start()
-    def emitted(): Set[(String, Long, Long)] = {
-      // Append mode: keep each (source, bucket)'s LATEST emission (the
-      // kmv read contract — later batches re-emit raised registers)
-      val all = spark.table("hll_stream")
-        .select($"source", $"bucket", $"rho").as[(String, Long, Long)]
-        .collect()
-      // registers are monotone, so the latest emission per cell IS the max
-      all.groupBy { case (s, b, _) => (s, b) }
-        .map { case (_, vs) => vs.maxBy(_._3) }.toSet
-    }
-    def batchOf(prefix: Seq[(String, String)]): Set[(String, Long, Long)] =
-      regSet(TextAnalysis.hllRegistersOf(
-        prefix.toDF("source", "text")
-          .select($"source",
-            explode(graft.functions.TextFunctions.tokens($"text")).as("w"))))
-    ms.addData(docs.take(150))
-    q.processAllAvailable()
-    assert(emitted() === batchOf(docs.take(150)))
-    ms.addData(docs.drop(150))
-    q.processAllAvailable()
-    assert(emitted() === batchOf(docs))
-    q.stop()
-    } finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
   }
 }

@@ -2,39 +2,13 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.Maintenance
-import graft.sources.Tables
 
-/** Write-layout behaviors observed on real output files: bounded file
-  * sizes, disjoint key ranges per file (file-level pruning works), and
-  * schema evolution via mergeSchema.
+/** Layout behaviors: the exact Z-order bit interleave, and schema
+  * evolution via mergeSchema observed on real output files.
   */
 class MaintenanceSpec extends SparkSpec {
   import spark.implicits._
-
-  test("compactRangeSorted: bounded files with disjoint, sorted key ranges") {
-    val out = Files.createTempDirectory("graft-compact").toString
-    Maintenance.compactRangeSorted(
-      Tables.lineitem(spark, Sf), out, numFiles = 4,
-      maxRecordsPerFile = 2500L, "l_orderkey")
-    // every row survived
-    assert(spark.read.parquet(out).count() === Tables.lineitem(spark, Sf).count())
-    // per-file key ranges are disjoint → min/max pruning can skip files
-    val ranges = spark.read.parquet(out)
-      .select(input_file_name().as("f"), $"l_orderkey")
-      .groupBy($"f").agg(min($"l_orderkey").as("lo"), max($"l_orderkey").as("hi"),
-        count(lit(1)).as("n"))
-      .collect()
-    assert(ranges.length >= 4)
-    assert(ranges.forall(_.getAs[Long]("n") <= 2500L))
-    val sorted = ranges.map(r => (r.getAs[Long]("lo"), r.getAs[Long]("hi"))).sortBy(_._1)
-    sorted.sliding(2).foreach {
-      case Array((_, hi1), (lo2, _)) => assert(hi1 <= lo2, s"overlapping file ranges: $hi1 > $lo2")
-      case _ =>
-    }
-  }
 
   test("zValue: exact bit interleave") {
     val df = Seq((0L, 0L), (1L, 0L), (0L, 1L), (2L, 1L), (255L, 255L))
@@ -47,39 +21,6 @@ class MaintenanceSpec extends SparkSpec {
     assert(got((0L, 1L)) === 2L)
     assert(got((2L, 1L)) === 6L)    // x=0b10 → bit2; y=0b1 → bit1
     assert(got((255L, 255L)) === 65535L)
-  }
-
-  test("z-order compaction: every file is a small box in BOTH dimensions") {
-    // dims chosen for their domains at this SF: l_orderkey mod 256 spans
-    // the full bucket space, l_partkey spans 0..199
-    val dims = Seq("l_orderkey", "l_partkey")
-    def fileWidths(path: String): Seq[(Double, Double)] = {
-      val b = (c: String) => pmod(col(c), lit(256)).cast("long")
-      spark.read.parquet(path)
-        .select(input_file_name().as("f"), b("l_orderkey").as("bx"), b("l_partkey").as("by"))
-        .groupBy($"f")
-        .agg((max($"bx") - min($"bx")).as("wx"), (max($"by") - min($"by")).as("wy"))
-        .as[(String, Long, Long)].collect().map(t => (t._2.toDouble, t._3.toDouble)).toSeq
-    }
-    val zout = Files.createTempDirectory("graft-z").toString
-    Maintenance.compactZOrdered(Tables.lineitem(spark, Sf), zout,
-      numFiles = 16, maxRecordsPerFile = 10000L, bits = 8, dims: _*)
-    assert(spark.read.parquet(zout).count() === Tables.lineitem(spark, Sf).count())
-    val lout = Files.createTempDirectory("graft-lin").toString
-    Maintenance.compactRangeSorted(Tables.lineitem(spark, Sf), lout,
-      numFiles = 16, maxRecordsPerFile = 10000L, dims: _*)
-    val zw = fileWidths(zout)
-    val lw = fileWidths(lout)
-    // linear sort clusters the leading dim but leaves the second dim
-    // spanning ~the full 256-bucket domain in every file; z-order bounds
-    // both, so min/max pruning works for filters on either axis
-    val zAvgY = zw.map(_._2).sum / zw.size
-    val lAvgY = lw.map(_._2).sum / lw.size
-    assert(zAvgY < lAvgY * 0.7,
-      f"z-order second-dim width $zAvgY%.1f not better than linear $lAvgY%.1f")
-    // and the first dimension stays bounded too (not a transposed sort)
-    val zAvgX = zw.map(_._1).sum / zw.size
-    assert(zAvgX < 256 * 0.7, f"z-order first-dim width $zAvgX%.1f unbounded")
   }
 
   test("schema evolution: mergeSchema unions old and new file schemas") {

@@ -359,17 +359,6 @@ class PlanQualitySpec extends SparkSpec {
     assert(!p.contains("Window"), "source cap must not plan a rank window")
   }
 
-  test("bloom decontamination plans no join at all on the train side") {
-    val df = graft.operators.TextAnalysis.contaminatedBloom(
-      graft.sources.Tables.documents(spark, Sf).filter("doc_id % 50 <> 0"),
-      graft.sources.Tables.documents(spark, Sf).filter("doc_id % 50 = 0"))
-    val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(p.contains("might_contain"), "bloom membership filter missing")
-    for (j <- Seq("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin",
-        "CartesianProduct", "BroadcastNestedLoopJoin"))
-      assert(!p.contains(j), s"bloom decontamination must not plan a $j")
-  }
-
   test("q_dedup_embed: one dot product per candidate pair") {
     // without the barrier the pushed cos>=minCos folds SeqDot into the
     // join condition AND keeps it in the projection — 2 evaluation sites

@@ -145,85 +145,4 @@ class SketchOpsSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getLong(1))).toSet
     assert(merged === full, "bottom-k must be closed under union, exactly")
   }
-
-  test("bloomGate streaming twin: doc-for-doc parity with the batch bloom gate, stateless") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.DocStream
-    implicit val ctx = spark.sqlContext
-    val docs = Tables.documents(spark, Sf)
-    val train = docs.filter($"doc_id" % 50 =!= 0)
-    val eval = docs.filter($"doc_id" % 50 === 0)
-    val bytes = TextAnalysis.evalBloomBytes(eval)
-    val batchFlagged = TextAnalysis.contaminatedBloom(train, eval)
-      .as[Long].collect().toSet
-    val exact = TextAnalysis.contaminated(train, eval).as[Long].collect().toSet
-    val ms = MemoryStream[(Long, String)]
-    val q = DocStream.bloomGate(ms.toDS().toDF("doc_id", "text"), bytes)
-      .writeStream.format("memory").queryName("bgate").outputMode("append").start()
-    ms.addData(train.select($"doc_id", $"text").as[(Long, String)].collect().toSeq)
-    q.processAllAvailable()
-    val streamFlagged = spark.table("bgate")
-      .filter($"bloom_hit").select($"doc_id").as[Long].collect().toSet
-    val stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-    q.stop()
-    assert(streamFlagged === batchFlagged,
-      "stream gate must flag exactly the batch bloom set")
-    assert(exact.subsetOf(streamFlagged), "no contaminated doc may pass unflagged")
-    assert(stateRows === 0L, "the gate must be stateless")
-  }
-
-  test("kmv streaming twin: sketch after any batch prefix equals the batch sketch") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.DocStream
-    implicit val ctx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val docs = Tables.documents(spark, Sf)
-        .select($"source", $"text").as[(String, String)].collect()
-      val (b1, b2) = docs.splitAt(docs.length / 2)
-      val k = 16 // small k so displacement across batches actually happens
-      val ms = MemoryStream[(String, String)]
-      val q = DocStream.kmvCandidates(spark, ms.toDS(), k = k)
-        .writeStream.format("memory").queryName("kmv_par").outputMode("append").start()
-      def latestSketch(): Map[String, Set[Long]] = {
-        // Append emits the full sketch each batch; the read contract is
-        // "latest emission per source" — with only adds, that is the
-        // union-min, i.e. the k smallest hashes ever emitted per source
-        spark.table("kmv_par").collect()
-          .map(r => (r.getString(0), r.getLong(1)))
-          .groupBy(_._1)
-          .map { case (s, hs) =>
-            s -> hs.map(_._2).distinct.sorted.take(k).toSet
-          }
-      }
-      def batchSketch(rows: Seq[(String, String)]): Map[String, Set[Long]] = {
-        val df = rows.toDF("source", "text")
-          .withColumn("doc_id", lit(0L)).withColumn("lang", lit("en"))
-          .withColumn("n_chars", lit(0L))
-        TextAnalysis.kmvSketch(df, k).collect()
-          .map(r => (r.getString(0), r.getLong(1)))
-          .groupBy(_._1).map { case (s, hs) => s -> hs.map(_._2).toSet }
-      }
-      ms.addData(b1.toSeq); q.processAllAvailable()
-      assert(latestSketch() === batchSketch(b1.toSeq), "prefix-1 parity")
-      ms.addData(b2.toSeq); q.processAllAvailable()
-      assert(latestSketch() === batchSketch(docs.toSeq), "full-stream parity")
-      // redelivery idempotence: replaying batch 1 changes nothing
-      ms.addData(b1.toSeq); q.processAllAvailable()
-      assert(latestSketch() === batchSketch(docs.toSeq), "redelivery is a no-op")
-      // state bounded: ≤ k entries per source
-      val stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-      q.stop()
-      val nSources = docs.map(_._1).distinct.length
-      assert(stateRows <= k.toLong * nSources, s"state $stateRows exceeds k per source")
-    } finally {
-      old match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
 }

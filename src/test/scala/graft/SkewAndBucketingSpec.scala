@@ -1,35 +1,15 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.operators.SkewJoin
 import graft.sources.Tables
 
-/** Partitioning strategies for scale: salted joins must preserve join
-  * semantics, and bucketed tables must produce exchange-free co-located
-  * joins (verified on the physical plan, not just by assertion).
+/** Partitioning strategies for scale: bucketed tables must produce
+  * exchange-free co-located joins (verified on the physical plan, not
+  * just by assertion).
   */
 class SkewAndBucketingSpec extends SparkSpec {
   import spark.implicits._
-
-  test("salted join ≡ plain join results (hot keys spread across tasks)") {
-    // synthesize skew: replicate one supplier's rows 50×
-    val li = Tables.lineitem(spark, Sf).select($"l_suppkey", $"l_extendedprice")
-    val hot = li.filter($"l_suppkey" === 1)
-    val skewed = li.union(
-      hot.crossJoin(spark.range(49).select(lit(1))).select($"l_suppkey", $"l_extendedprice"))
-    val sup = Tables.supplier(spark, Sf).select($"s_suppkey", $"s_name")
-    val plain = skewed.join(sup, $"l_suppkey" === $"s_suppkey")
-      .groupBy($"s_name").agg(count(lit(1)).as("n"), sum($"l_extendedprice".cast("decimal(18,2)")).as("s"))
-    // saltedInnerJoin joins on `key` present in both sides — rename first
-    val saltedJ = SkewJoin.saltedInnerJoin(
-        skewed.withColumnRenamed("l_suppkey", "s_suppkey"), sup, "s_suppkey", 8)
-      .groupBy($"s_name").agg(count(lit(1)).as("n"), sum($"l_extendedprice".cast("decimal(18,2)")).as("s"))
-    assert(plain.exceptAll(saltedJ).count() === 0)
-    assert(saltedJ.exceptAll(plain).count() === 0)
-  }
 
   test("bucketed tables join without a shuffle exchange") {
     val s = spark

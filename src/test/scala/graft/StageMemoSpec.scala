@@ -111,10 +111,10 @@ class StageMemoSpec extends SparkSpec {
       .toDF("vec_id", "embedding", "label")
     val cents = Similarity.kmeansFitMemo(e, NoDir, "spec", k = 2, iters = 1)
     Dedup.winnowPairsFor(c, Sf)
-    assert(Dedup.memoSize >= 1)
+    assert(StageMemo.size(Dedup.Owner) >= 1)
     Dedup.clearMemos()
-    assert(Dedup.memoSize === 0)
-    assert(Similarity.memoSize >= 1)
+    assert(StageMemo.size(Dedup.Owner) === 0)
+    assert(StageMemo.size(Similarity.Owner) >= 1)
     assert(Similarity.kmeansFitMemo(e, NoDir, "spec", k = 2, iters = 1) eq cents)
     Similarity.clearMemos()
   }
@@ -132,11 +132,11 @@ class StageMemoSpec extends SparkSpec {
     val c = Dedup.corpus(Tables.documents(spark, Sf))
     Dedup.clearMemos()
     val clusters = Dedup.clustersFor(c, Sf)
-    assert(Dedup.memoSize === 2, "clusters + the verified pairs they were built from")
+    assert(StageMemo.size(Dedup.Owner) === 2, "clusters + the verified pairs they were built from")
     val pairs = Dedup.jaccardPairsFor(c, Sf)
     assert(Dedup.clustersFor(c, Sf) eq clusters)
     assert(Dedup.jaccardPairsFor(c, Sf) eq pairs)
-    assert(Dedup.memoSize === 2)
+    assert(StageMemo.size(Dedup.Owner) === 2)
     Dedup.clearMemos()
   }
 

@@ -114,21 +114,21 @@ class TablesSpec extends SparkSpec {
     val c = graft.operators.Dedup.corpus(docs)
     val dir = "/tmp/graft-memo-spec-dir" // key only; fingerprint = absent
     val first = graft.operators.Dedup.clustersFor(c, dir)
-    assert(graft.operators.Dedup.memoSize >= 1)
+    assert(graft.sources.StageMemo.size(graft.operators.Dedup.Owner) >= 1)
     // memo hit returns the SAME frame instance
     assert(graft.operators.Dedup.clustersFor(c, dir) eq first)
     graft.operators.Dedup.clearMemos()
-    assert(graft.operators.Dedup.memoSize === 0)
+    assert(graft.sources.StageMemo.size(graft.operators.Dedup.Owner) === 0)
     assert(!(graft.operators.Dedup.clustersFor(c, dir) eq first),
       "after clearMemos a fresh stage table must be built")
     graft.operators.Dedup.clearMemos()
     val e = Seq((0L, Array.fill(4)(0.1f), 0), (1L, Array.fill(4)(0.9f), 1))
       .toDF("vec_id", "embedding", "label")
     val cents = graft.operators.Similarity.kmeansFitMemo(e, dir, "spec", k = 2, iters = 1)
-    assert(graft.operators.Similarity.memoSize >= 1)
+    assert(graft.sources.StageMemo.size(graft.operators.Similarity.Owner) >= 1)
     assert(graft.operators.Similarity.kmeansFitMemo(e, dir, "spec", k = 2, iters = 1) eq cents)
     graft.operators.Similarity.clearMemos()
-    assert(graft.operators.Similarity.memoSize === 0)
+    assert(graft.sources.StageMemo.size(graft.operators.Similarity.Owner) === 0)
   }
 
   /** A Spark-written store: `parts` part files plus `_SUCCESS` and the

@@ -8,7 +8,7 @@ import graft.functions.TextFunctions
   * Poisson), neymanAllocation + stratifiedNeymanSample (variance-
   * optimal seats, bounded-heap execution), snapshotDiff (manifest
   * reconciliation), zipfOctaves (frequency-law profile), and the
-  * count–min sketch (batch + streaming twin): hand-computed semantics
+  * count–min sketch: hand-computed semantics
   * on tiny corpora, conservation laws, the CMS ≥-true and mergeability
   * guarantees, and the plan-shape claims (TakeOrderedAndProject /
   * partial_topkbyvalue selection; no global sort, no low-cardinality
@@ -72,94 +72,6 @@ class WeightedSampleSpec extends SparkSpec {
     assert(a === b)
   }
 
-  test("sampleCandidates streaming twin: refined candidates == the batch sample, state bounded") {
-    import java.sql.Timestamp
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.DocStream
-    implicit val ctx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val rows = (0L until 120L).map(i =>
-        DocStream.StreamDoc(Timestamp.valueOf("2024-01-01 00:00:00"),
-          i, s"w$i " * (i.toInt % 7 + 1) + s"tail$i"))
-      val ms = MemoryStream[DocStream.StreamDoc]
-      val q = DocStream.sampleCandidates(spark, ms.toDS(), n = 12, classes = 4)
-        .writeStream.format("memory").queryName("wres").outputMode("append").start()
-      // two micro-batches: winners must survive and be displaced across batches
-      ms.addData(rows.take(60)); q.processAllAvailable()
-      ms.addData(rows.drop(60)); q.processAllAvailable()
-      val progress = q.lastProgress
-      q.stop()
-      // refine: per class the LAST emission is the live winner set; the
-      // global 12 = smallest (skey, doc_id) of the candidate union
-      val cand = spark.table("wres")
-        .groupBy(col("cls"), col("doc_id")).agg(max(col("skey")).as("skey"))
-        .collect().map(r => (r.getLong(1), r.getDouble(2)))
-      val refined = cand.distinct.sortBy { case (id, k) => (k, id) }
-        .take(12).map(_._1).toSet
-      val batch = Curation.weightedSample(
-        rows.map(d => (d.doc_id, d.text, "en")).toDF("doc_id", "text", "lang"), 12)
-        .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-      assert(refined === batch,
-        "refined streaming candidates diverged from the batch sample")
-      // constant state: ≤ classes·n reservoir entries, never stream-linear
-      val stateRows = progress.stateOperators.map(_.numRowsTotal).sum
-      assert(stateRows <= 4L * 12L, s"reservoir state exploded: $stateRows")
-    } finally {
-      old match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
-  test("sampleCandidates: redelivering a stored winner never shrinks a full reservoir") {
-    import java.sql.Timestamp
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.DocStream
-    implicit val ctx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val rows = (0L until 9L).map(i =>
-        DocStream.StreamDoc(Timestamp.valueOf("2024-01-01 00:00:00"),
-          i, s"w$i " * (i.toInt % 5 + 1) + s"tail$i"))
-      val d = rows.map(r => (r.doc_id, r.text, "en")).toDF("doc_id", "text", "lang")
-      // the global winner is certainly stored and certainly NOT the worst
-      // entry — the exact row whose redelivery used to evict a legitimate
-      // winner and leave the reservoir at n−1 forever
-      val champion = Curation.weightedSample(d, 1).collect().head.getLong(0)
-      val ms = MemoryStream[DocStream.StreamDoc]
-      val q = DocStream.sampleCandidates(spark, ms.toDS(), n = 3, classes = 1)
-        .writeStream.format("memory").queryName("wres_dup").outputMode("append").start()
-      ms.addData(rows); q.processAllAvailable()
-      ms.addData(Seq(rows(champion.toInt))) // at-least-once redelivery
-      q.processAllAvailable()
-      val stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-      q.stop()
-      assert(stateRows === 3L,
-        s"full reservoir must stay at n entries after a duplicate, got $stateRows")
-      // and the refined winner set still equals the batch sample exactly
-      val refined = spark.table("wres_dup")
-        .groupBy(col("doc_id")).agg(max(col("skey")).as("skey"))
-        .collect().map(r => (r.getLong(0), r.getDouble(1)))
-        .sortBy { case (id, k) => (k, id) }.take(3).map(_._1).toSet
-      val batch = Curation.weightedSample(d, 3)
-        .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-      assert(refined === batch)
-    } finally {
-      old match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
   // ---- snapshotDiff ---------------------------------------------------
 
   test("snapshotDiff: residue-derived statuses and token deltas") {
@@ -190,72 +102,6 @@ class WeightedSampleSpec extends SparkSpec {
     val delta = Curation.snapshotDiff(d)
       .agg(sum(col("token_delta"))).as[Long].head()
     assert(delta === totB - totA)
-  }
-
-  test("snapshotDiffCdc streaming twin: A then A→B CDC ops == the batch diff; statuses compose on") {
-    import java.sql.Timestamp
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.DocStream
-    import DocStream.{DiffEvent, ManifestOp}
-    implicit val ctx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // residue-rich corpus: ids 0..32 hit removed(%11=3), changed(%11=4),
-      // re-published(%11=5) and unchanged tiers
-      val d = docs((0L until 33L).map(i =>
-        (i, (s"w$i " * (i.toInt % 5 + 1)).trim, if (i % 2 == 0) "en" else "de")): _*)
-      def manifest(df: org.apache.spark.sql.DataFrame, t: String) = df
-        .select(col("doc_id"), col("lang"),
-          TextFunctions.stringHash(col("text")).as("h"),
-          size(TextFunctions.tokens(col("text"))).cast("long").as("n_tokens"))
-        .collect().map(r => ManifestOp(Timestamp.valueOf(t), r.getLong(0),
-          r.getString(1), r.getLong(2), r.getLong(3), deleted = false)).toSeq
-      val a = manifest(d, "2024-01-01 00:00:00")
-      val b = manifest(Curation.snapshotB(d), "2024-01-02 00:00:00")
-      val removed = a.map(_.doc_id).toSet -- b.map(_.doc_id).toSet
-      val tombs = removed.toSeq.map(id => ManifestOp(
-        Timestamp.valueOf("2024-01-02 00:00:00"), id, "x", 0L, 0L, deleted = true))
-      val ms = MemoryStream[ManifestOp]
-      val q = DocStream.snapshotDiffCdc(spark, ms.toDS())
-        .writeStream.format("memory").queryName("snapcdc").outputMode("append").start()
-      ms.addData(a); q.processAllAvailable()
-      val gen1 = spark.table("snapcdc").as[DiffEvent].collect().toSeq
-      assert(gen1.forall(_.status == "added") && gen1.size === a.size,
-        "generation A must arrive as pure adds")
-      ms.addData(b ++ tombs); q.processAllAvailable()
-      val all2 = spark.table("snapcdc").as[DiffEvent].collect().toSeq
-      val gen2 = all2.diff(gen1)
-      // the A→B emissions, rolled up, ARE the batch snapshotDiff
-      val gotRollup = gen2.groupBy(e => (e.status, e.lang)).map { case (k, es) =>
-        k -> (es.size.toLong, es.map(_.token_delta).sum)
-      }
-      val batch = Curation.snapshotDiff(d).collect()
-        .map(r => (r.getString(0), r.getString(1)) ->
-          (r.getLong(2), r.getLong(3))).toMap
-      assert(gotRollup === batch,
-        s"streaming generation rollup diverged from the batch diff:\n$gotRollup\nvs $batch")
-      // statuses compose across generations: delete one B doc, re-crawl
-      // another unchanged — per-doc statuses continue off the B state
-      val victim = b.head
-      val same = b(1)
-      ms.addData(Seq(
-        victim.copy(ts = Timestamp.valueOf("2024-01-03 00:00:00"), deleted = true),
-        same.copy(ts = Timestamp.valueOf("2024-01-03 00:00:00"))))
-      q.processAllAvailable(); q.stop()
-      val gen3 = spark.table("snapcdc").as[DiffEvent].collect().toSeq
-        .diff(all2)
-      assert(gen3.toSet === Set(
-        DiffEvent(victim.doc_id, victim.lang, "removed", -victim.n_tokens),
-        DiffEvent(same.doc_id, same.lang, "unchanged", 0L)), s"got $gen3")
-    } finally {
-      old match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
   }
 
   test("jackknifeMean: matches an independent plain-Scala reference; degenerate and determinism") {
@@ -326,40 +172,6 @@ class WeightedSampleSpec extends SparkSpec {
       .agg(sum(col("cnt")).as("cnt"))
       .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(whole === merged)
-  }
-
-  test("cmsCells streaming twin: latest update per cell == batch sketch of the full stream") {
-    import java.sql.Timestamp
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.DocStream
-    implicit val ctx = spark.sqlContext
-    val b1 = Seq(
-      DocStream.StreamDoc(Timestamp.valueOf("2024-01-01 00:00:00"), 1L, "p q r p"),
-      DocStream.StreamDoc(Timestamp.valueOf("2024-01-01 00:00:01"), 2L, "p s"))
-    val b2 = Seq(
-      DocStream.StreamDoc(Timestamp.valueOf("2024-01-01 00:01:00"), 3L, "q q t"))
-    val ms = MemoryStream[DocStream.StreamDoc]
-    val q = DocStream.cmsCells(ms.toDF())
-      .writeStream.format("memory").queryName("cms_tws").outputMode("update").start()
-    Seq(b1, b2).foreach { b => ms.addData(b); q.processAllAvailable() }
-    q.stop()
-    // counts are monotone per cell, so the latest emission per cell = max
-    val streamed = spark.table("cms_tws")
-      .groupBy(col("row_i"), col("bucket")).agg(max(col("cnt")).as("cnt"))
-      .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val batch = graft.operators.TextAnalysis.cmsSketch(
-      (b1 ++ b2).map(d => (d.doc_id, d.text, "en")).toDF("doc_id", "text", "lang"))
-      .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(streamed === batch, "streaming sketch diverged from the batch sketch")
-    // the second batch emitted ONLY the cells it touched (update mode):
-    // emissions = distinct cells touched per batch, not the whole sketch
-    val updates = spark.table("cms_tws").count()
-    val b1cells = graft.operators.TextAnalysis.cmsSketch(
-      b1.map(d => (d.doc_id, d.text, "en")).toDF("doc_id", "text", "lang")).count()
-    val b2cells = graft.operators.TextAnalysis.cmsCellsOf(
-      Seq("q", "q", "t").toDF("w")).distinct().count()
-    assert(updates === b1cells + b2cells,
-      "update mode must re-emit only touched cells per micro-batch")
   }
 
   test("neymanAllocation: variance earns seats, Hamilton seats sum to n exactly") {
@@ -449,12 +261,12 @@ class WeightedSampleSpec extends SparkSpec {
     val d = docs((0L until 40L).map(i => (i, s"a$i b${i % 9} c", "en")): _*)
     val sk = graft.operators.TextAnalysis.cmsSketch(d)
     val cells = sk.count()
-    assert(cells <= graft.operators.TextAnalysis.CmsD.toLong *
+    assert(cells <= graft.operators.TextAnalysis.CmsA.size.toLong *
       graft.operators.TextAnalysis.CmsW)
     val n = d.select(sum(size(TextFunctions.tokens(col("text")))
       .cast("long"))).as[Long].head()
     val mass = sk.agg(sum(col("cnt"))).as[Long].head()
-    assert(mass === graft.operators.TextAnalysis.CmsD * n,
+    assert(mass === graft.operators.TextAnalysis.CmsA.size * n,
       "every row of the sketch holds the full token mass")
   }
 }

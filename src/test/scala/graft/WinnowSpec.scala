@@ -45,25 +45,6 @@ class WinnowSpec extends SparkSpec {
     rows.foreach { case (nat, hof) => assert(nat === hof) }
   }
 
-  test("winnowFingerprintsNarrow equals the batch winnow's distinct hash set") {
-    // the streaming-safe per-row formulation must select the SAME
-    // position-free fingerprint hashes as the batch windowed pass, for
-    // every doc-length regime: normal, too-short-to-shingle (empty),
-    // fewer-shingles-than-window (single truncated window), long
-    val docs = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog near the river bank"),
-      (2L, "a b"),
-      (3L, "one two three"),
-      (4L, Seq.tabulate(40)(i => s"t${i % 7}").mkString(" "))
-    ).toDF("doc_id", "text")
-    val narrow = docs.select($"doc_id",
-        explode(TextAnalysis.winnowFingerprintsNarrow($"text")).as("h"))
-      .as[(Long, Long)].collect().toSet
-    val batch = TextAnalysis.winnow(docs).select($"doc_id", $"h")
-      .distinct().as[(Long, Long)].collect().toSet
-    assert(narrow === batch)
-  }
-
   /** Reference PolyHash trigram shingles (ASCII inputs, so plain
     * toLowerCase matches the ICU path used by ShingleHashes).
     */
